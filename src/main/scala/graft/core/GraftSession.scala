@@ -52,10 +52,10 @@ object GraftSession {
     // matters most. Off by default in Spark; the thresholds keep it to
     // genuinely selective cases (injection fires — PlanAuditSpec).
     .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    // NOTE: spark.sql.files.ignoreMissingFiles stays FALSE (default) for
-    // the data path — a pipeline must fail loudly on incomplete input.
-    // CatalogStore.read sets the option per read for catalog tables only,
-    // where a scan racing a log compaction should degrade, not 500.
+    // NOTE: spark.sql.files.ignoreMissingFiles stays FALSE (default) — a
+    // read must fail loudly on incomplete input. Catalog reads need no
+    // exception: CatalogStore decodes an explicit file list under the
+    // table lock, so no swap can move a file out from under the scan.
     // parquet: µs timestamps for cross-engine parity; 128 MB splits keep
     // scan tasks uniform on large files
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

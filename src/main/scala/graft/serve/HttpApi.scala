@@ -273,14 +273,16 @@ final class HttpApi(spark: SparkSession, deps: HttpApi.Deps) {
           "error" -> "缺少API Token，请在Authorization头中使用\"Bearer YOUR_TOKEN\"格式")))
       case Some(tok) =>
         val now = new java.sql.Timestamp(System.currentTimeMillis())
-        // bind the users frame ONCE: a second deps.users() call would build
-        // a fresh plan whose attribute ids don't resolve against the joined
-        // relation (works only if the supplier memoizes — not a contract)
-        val users = deps.users()
-        val valid = deps.userTokens()
+        // the token JOIN users as two driver-side lookups: a filter plus
+        // collect/isEmpty over a catalog snapshot (a LocalRelation) runs
+        // no Spark job, where a join would start one on every request.
+        // SQL null semantics are unchanged: a null token/expiry fails the
+        // filter, and a null userId matches no `id IN (...)`.
+        val userIds = deps.userTokens()
           .filter(col("token") === tok && col("expiresAt") > lit(now))
-          .join(users, col("userId") === users("id"))
-        if (valid.isEmpty) Some((401, Json.obj("error" -> "无效或过期的API Token")))
+          .select("userId").collect().map(_.get(0))
+        if (userIds.isEmpty || deps.users().filter(col("id").isin(userIds: _*)).isEmpty)
+          Some((401, Json.obj("error" -> "无效或过期的API Token")))
         else None
     }
   }

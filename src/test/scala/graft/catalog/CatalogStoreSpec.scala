@@ -2,6 +2,8 @@ package graft.catalog
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
 import graft.catalog.Model._
 
@@ -63,7 +65,7 @@ class CatalogStoreSpec extends SparkSuite {
     store.append(spark.createDataset(Seq(
       TaskLog(2, 10, "failed", "boom", ts("2026-01-01 11:00:00")))), "task_logs")
     // simulate a crash mid-append: a .parquet part with a valid head magic
-    // but no footer (the torn shape ignoreCorruptFiles would hide forever)
+    // but no footer
     val torn = Paths.get(root, "task_logs", "part-torn-crash.snappy.parquet")
     Files.write(torn, ("PAR1" + "x" * 64).getBytes("US-ASCII"))
     val rows = store.read[TaskLog]("task_logs").collect()
@@ -340,5 +342,225 @@ class CatalogStoreSpec extends SparkSuite {
     // any entry path restores the displaced directory instead of seeing an
     // empty table forever (and the next cleanup deleting the history)
     assert(store.read[TaskLog]("task_logs").count() == 1)
+  }
+
+  // ---- driver-resident snapshot ------------------------------------------
+
+  private def log(i: Int) = TaskLog(i.toLong, 10, "success", s"m$i",
+    ts("2026-01-01 10:00:00"))
+  private def logIds(store: CatalogStore): Seq[Long] =
+    store.read[TaskLog]("task_logs").collect().map(_.id).sorted.toSeq
+  private def partFiles(dir: java.nio.file.Path): Seq[String] = {
+    val s = java.nio.file.Files.list(dir)
+    try s.iterator.asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted
+    finally s.close()
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously but in order, so two marked sentinel jobs bracket the
+    * count: nothing before the first or after the second is included. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (open, close) = (java.util.UUID.randomUUID.toString, java.util.UUID.randomUUID.toString)
+    val counted = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
+          case `open` => counted.set(0)
+          case `close` => done.countDown()
+          case _ => if (done.getCount > 0 && counted.get >= 0) counted.incrementAndGet()
+        }
+    }
+    def sentinel(marker: String): Unit = {
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel(open); body; sentinel(close)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("readers racing 50 updateRows swaps always see every row") {
+    val store = new CatalogStore(spark, tmpDir("cat"))
+    import spark.implicits._
+    val ids = (1L to 5L).toSeq
+    store.overwrite(spark.createDataset(ids.map(i => mkTask(i, s"t$i"))), "tasks")
+    @volatile var stop = false
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val readers = (1 to 3).map { _ =>
+      new Thread(() => {
+        try while (!stop) {
+          val got = store.read[Task]("tasks").collect().map(_.id).sorted.toSeq
+          reads.incrementAndGet()
+          if (got != ids) bad.add(got.mkString(","))
+        } catch { case e: Throwable => bad.add(e.toString) }
+      })
+    }
+    readers.foreach(_.start())
+    try (1 to 50).foreach { n =>
+      store.updateRows[Task]("tasks", _.id == 1L, _.copy(name = s"v$n"))
+    } finally { stop = true; readers.foreach(_.join(60000)) }
+    assert(bad.isEmpty, s"${bad.size} of ${reads.get} reads were wrong, e.g. [${bad.peek()}]")
+    assert(reads.get > 0)
+    assert(store.read[Task]("tasks").collect().find(_.id == 1L).map(_.name).contains("v50"))
+  }
+
+  test("a part file with valid magic but an undecodable body fails the read loudly") {
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    import spark.implicits._
+    (1 to 2).foreach(i => store.append(spark.createDataset(Seq(log(i))), "task_logs"))
+    Files.write(Paths.get(root, "task_logs", "part-garbled.snappy.parquet"),
+      ("PAR1" + "garbage" * 16 + "PAR1").getBytes("US-ASCII"))
+    // passes the magic check, so it is not quarantined; decoding must throw
+    // rather than return the two intact rows as if they were the table
+    intercept[Exception](store.read[TaskLog]("task_logs").collect())
+  }
+
+  test("snapshot coherence: a write through a second store on the same root") {
+    val root = tmpDir("cat")
+    val (a, b) = (new CatalogStore(spark, root), new CatalogStore(spark, root))
+    import spark.implicits._
+    a.append(spark.createDataset(Seq(log(1))), "task_logs")
+    assert(logIds(a) == Seq(1L))
+    b.append(spark.createDataset(Seq(log(2))), "task_logs")
+    assert(logIds(a) == Seq(1L, 2L))
+    b.delete[TaskLog]("task_logs", _.id == 1L)
+    assert(logIds(a) == Seq(2L))
+  }
+
+  test("snapshot coherence: recover() restoring a .bak when live is missing") {
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    import spark.implicits._
+    store.append(spark.createDataset(Seq(log(1))), "task_logs")
+    val saved = Paths.get(tmpDir("saved"), "v1")
+    Files.move(Paths.get(root, "task_logs"), saved)
+    store.append(spark.createDataset(Seq(log(2))), "task_logs")
+    assert(logIds(store) == Seq(2L)) // snapshot now holds the newer table
+    // a death between the swap's two moves: live gone, the older table in .bak
+    graft.core.Fs.deleteRecursively(Paths.get(root, "task_logs"))
+    Files.move(saved, Paths.get(root, "task_logs.bak"))
+    assert(logIds(store) == Seq(1L))
+  }
+
+  test("snapshot coherence: a part file torn in place is quarantined") {
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    import spark.implicits._
+    val live = Paths.get(root, "task_logs")
+    store.append(spark.createDataset(Seq(log(1))), "task_logs")
+    val first = partFiles(live).toSet
+    store.append(spark.createDataset(Seq(log(2))), "task_logs")
+    assert(logIds(store) == Seq(1L, 2L))
+    val second = (partFiles(live).toSet -- first).head
+    // same name, torn content: the validation memo must not vouch for it
+    Files.write(live.resolve(second), ("PAR1" + "x" * 64).getBytes("US-ASCII"))
+    Files.deleteIfExists(live.resolve("." + second + ".crc"))
+    assert(logIds(store) == Seq(1L))
+    assert(Files.exists(Paths.get(root, "task_logs.quarantine", second)))
+  }
+
+  test("snapshot coherence: a compaction swap carrying an out-of-band straggler") {
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    import spark.implicits._
+    (1 to 6).foreach(i => store.append(spark.createDataset(Seq(log(i))), "task_logs"))
+    assert(logIds(store) == (1L to 6L))
+    // a row written straight into the live directory, bypassing the store,
+    // is carried over by the swap; the next read must include it
+    val ran = store.compactIfFragmented[TaskLog]("task_logs", maxFiles = 4,
+      numPartitions = 2, beforeSwap = () => Seq(log(7)).toDS()
+        .write.mode("append").parquet(s"$root/task_logs"))
+    assert(ran)
+    assert(logIds(store) == (1L to 7L))
+  }
+
+  test("snapshot coherence: an out-of-band rewrite under the same part-file name") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    import spark.implicits._
+    store.append(spark.createDataset(Seq(log(1))), "task_logs")
+    assert(logIds(store) == Seq(1L))
+    val other = Paths.get(tmpDir("other"), "t")
+    Seq(log(2), log(3)).toDS().coalesce(1).write.parquet(other.toString)
+    val (src, dst) = (partFiles(other).head, partFiles(Paths.get(root, "task_logs")).head)
+    assert(Files.size(other.resolve(src)) != Files.size(Paths.get(root, "task_logs", dst)))
+    Files.copy(other.resolve(src), Paths.get(root, "task_logs", dst),
+      StandardCopyOption.REPLACE_EXISTING)
+    Files.copy(other.resolve("." + src + ".crc"), Paths.get(root, "task_logs", "." + dst + ".crc"),
+      StandardCopyOption.REPLACE_EXISTING)
+    assert(logIds(store) == Seq(2L, 3L))
+  }
+
+  test("snapshot hits start no Spark job; a miss starts exactly one read job") {
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    store.overwrite(spark.createDataset(Seq(mkTask(1, "a"), mkTask(2, "b"))), "tasks")
+    assert(jobsDuring(assert(store.read[Task]("tasks").collect().length == 2)) == 1)
+    assert(jobsDuring(assert(store.read[Task]("tasks").collect().length == 2)) == 0)
+    assert(jobsDuring(assert(!store.read[Task]("tasks").filter(col("id") === 2L).isEmpty)) == 0)
+    assert(jobsDuring(assert(store.read[Task]("tasks").filter(col("id") === 9L).isEmpty)) == 0)
+    // writers refresh the snapshot with the rows they wrote
+    store.upsert[Task]("tasks", Seq(mkTask(3, "c")), _.id)
+    store.append(spark.createDataset(Seq(log(1))), "task_logs")
+    assert(jobsDuring(assert(logIds(store) == Seq(1L))) == 1) // first read: miss
+    store.append(spark.createDataset(Seq(log(2))), "task_logs")
+    assert(jobsDuring {
+      assert(store.read[Task]("tasks").collect().length == 3)
+      assert(logIds(store) == Seq(1L, 2L))
+    } == 0)
+  }
+
+  test("HttpApi's token check over snapshot suppliers starts no Spark job") {
+    import java.net.URI
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    import graft.serve.HttpApi
+    val store = new CatalogStore(spark, tmpDir("cat"))
+    import spark.implicits._
+    store.overwrite(Seq(User(1L, "u", "salt:hash", ts("2026-01-01 00:00:00"))).toDS(), "users")
+    store.overwrite(Seq(
+      UserToken(1L, 1L, "live", ts("2099-01-01 00:00:00"), ts("2026-01-01 00:00:00")),
+      UserToken(2L, 1L, "old", ts("2020-01-01 00:00:00"), ts("2019-01-01 00:00:00")),
+      UserToken(3L, 2L, "orphan", ts("2099-01-01 00:00:00"), ts("2026-01-01 00:00:00"))).toDS(),
+      "user_tokens")
+    val api = new HttpApi(spark, HttpApi.Deps(
+      tasks = () => store.read[Task]("tasks").toDF(),
+      taskLogs = () => store.read[TaskLog]("task_logs").toDF(),
+      sqlScripts = () => store.read[SqlScript]("sql_scripts").toDF(),
+      notificationLogs = () => store.read[NotificationLog]("notification_logs").toDF(),
+      emailConfigs = () => store.read[EmailConfig]("email_configs").toDF(),
+      users = () => store.read[User]("users").toDF(),
+      userTokens = () => store.read[UserToken]("user_tokens").toDF(),
+      dbConfigs = () => store.read[DbConfig]("db_configs").toDF(),
+      insert = (_, _, _) => Left("unused")))
+    val port = api.start()
+    val client = HttpClient.newHttpClient()
+    // a non-numeric task id answers 404 right after the token check
+    def status(token: String): Int = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port/api/task-logs/x"))
+        .header("Authorization", s"Bearer $token").GET().build(),
+      HttpResponse.BodyHandlers.ofString()).statusCode()
+    try {
+      assert(status("live") == 404) // first reads of both tables: misses
+      assert(jobsDuring {
+        assert(status("live") == 404)
+        assert(status("old") == 401)    // expired
+        assert(status("orphan") == 401) // no such user
+        assert(status("nope") == 401)
+      } == 0)
+    } finally api.stop()
   }
 }
