@@ -158,6 +158,11 @@ final class CatalogStore(spark: SparkSession, root: String) {
     CatalogStore.snapshots.put(tableKey(table),
       CatalogStore.Snapshot(parts, enc.clsTag.runtimeClass, rows))
 
+  /** (table, name, size, mtime) of part files that passed [[liveParts]]'s
+    * magic check. */
+  private val validatedParts = java.util.concurrent.ConcurrentHashMap
+    .newKeySet[(String, String, Long, Long)]()
+
   /** name → (size, mtime) of every live part file, or None when the live
     * directory is absent or vanishes mid-listing (a swap in flight).
     *
@@ -167,8 +172,6 @@ final class CatalogStore(spark: SparkSession, root: String) {
     * `<table>.quarantine/` with a loud warning and left out of the result:
     * a crash mid-append (append is not atomic) must neither fail every
     * future read of the table nor be skipped silently. */
-  private val validatedParts = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[(String, String, Long, Long)]()
   private def liveParts(table: String): Option[CatalogStore.Parts] = {
     val d = dir(table)
     try {
@@ -270,13 +273,13 @@ final class CatalogStore(spark: SparkSession, root: String) {
     spark.createDataset(rows)(ds.encoder)
       .write.mode(SaveMode.Append).parquet(dir(table).toString)
     val key = tableKey(table)
-    Option(CatalogStore.snapshots.get(key))
+    val prior = Option(CatalogStore.snapshots.get(key))
       .filter(s => before.contains(s.parts) && s.cls == ds.encoder.clsTag.runtimeClass)
-      .zip(liveParts(table)) match {
-        case Some((s, after)) =>
-          CatalogStore.snapshots.put(key, s.copy(parts = after, rows = s.rows ++ rows))
-        case None => CatalogStore.snapshots.remove(key)
-      }
+    (prior, liveParts(table)) match {
+      case (Some(s), Some(after)) =>
+        CatalogStore.snapshots.put(key, s.copy(parts = after, rows = s.rows ++ rows))
+      case _ => CatalogStore.snapshots.remove(key)
+    }
   }
 
   /** Move a part file AND its hidden ChecksumFileSystem `.crc` sibling, so
