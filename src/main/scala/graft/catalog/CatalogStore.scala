@@ -6,6 +6,9 @@ import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SaveMode, SparkSession}
 
 /** Mutable metadata catalog over immutable Parquet — the reference's SQLite
@@ -24,15 +27,20 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders, SaveMode, SparkSession}
   * the increment, not history size.
   *
   * Reads are served from a driver-resident snapshot of each table (see
-  * [[read]]), which costs heap and a per-read re-encode. Measured for
-  * `task_logs` rows (~40-character messages) with `SizeEstimator`, median
-  * of 21-51 hits, on a 4-core container (JDK 17, Spark 4.1.2):
-  *  - 2,992 rows (the reference's shipped `scheduler.db`): 0.65 MiB
-  *    retained; a hit of `read[TaskLog]("task_logs")` 14 ms, 23 ms with
+  * [[read]]). A table holds its rows on the driver only up to
+  * [[CatalogStore.SnapshotMaxRows]]; past that its snapshot is a Spark read
+  * of its part files, so driver heap is bounded by the table count times
+  * that many rows however long a deployment keeps its logs. Measured for
+  * `task_logs` rows (~40-character messages; `SizeEstimator` over the
+  * `LocalRelation`'s rows; medians of 21 hits; 4-core container, JDK 17,
+  * Spark 4.1.2):
+  *  - 2,992 rows (the reference's shipped `scheduler.db`): 0.45 MiB
+  *    retained; a hit of `read[TaskLog]("task_logs")` 2.6 ms, 7.7 ms with
   *    `.collect()`;
-  *  - 100k rows: 21.8 MiB (229 B/row); a hit 133 ms, 335 ms with
-  *    `.collect()`;
-  *  - a miss (one Spark read) took 620-680 ms at either size.
+  *  - 10,000 rows (the bound): 1.49 MiB (157 B/row); a hit 0.9 ms, 6.4 ms
+  *    with `.collect()`, 137 ms for the scheduler's top-K window;
+  *  - 100k rows: nothing retained; every read is a Spark scan (`.collect()`
+  *    96 ms, the window 129 ms, on a freshly overwritten table).
   */
 final class CatalogStore(spark: SparkSession, root: String) {
 
@@ -111,52 +119,85 @@ final class CatalogStore(spark: SparkSession, root: String) {
     *
     * Served from the table's JVM-wide snapshot when the live part-file set
     * (names, sizes and mtimes, from the listing that also quarantines torn
-    * files) equals the set the snapshot was decoded from: the result is a
-    * `LocalRelation`, so filters, `collect` and `isEmpty` on it run with no
-    * Spark job and no file open. Any other listing — a write through
-    * another store instance, `recover()` restoring a `.bak`, a quarantined
-    * file, a compaction swap, an out-of-band rewrite — misses, and the miss
-    * reads exactly the listed files under the table lock, where no writer
-    * can move them mid-read. A listing taken during a swap (live directory
-    * briefly absent, or a file vanishing mid-listing) is not a snapshot
-    * key at all and also waits on the lock, so a read sees the old table
-    * or the new one, never an empty or partial one. A part file that
-    * cannot be decoded fails the read; no rows are skipped silently. */
+    * files) equals the set the snapshot was taken of. Up to
+    * `SnapshotMaxRows` rows the result is a `LocalRelation`, so filters,
+    * `collect` and `isEmpty` on it run with no Spark job and no file open.
+    * Any other listing — a write through another store instance,
+    * `recover()` restoring a `.bak`, a quarantined file, a compaction swap,
+    * an out-of-band rewrite — misses, and the miss decodes exactly the
+    * listed files under the table lock, where no writer can move them
+    * mid-read. A listing taken during a swap (live directory briefly
+    * absent, or a file vanishing mid-listing) is not a snapshot key at all
+    * and also waits on the lock, so a read sees the old table or the new
+    * one, never an empty or partial one. A part file that cannot be
+    * decoded fails the read; no rows are skipped silently.
+    *
+    * Past `SnapshotMaxRows` (by the footers' row counts) the result is a
+    * Spark read of the listed files instead, opened when it runs, outside
+    * the lock: a compaction swap landing in between fails that read with a
+    * missing file rather than returning fewer rows. */
   def read[T <: Product: TypeTag](table: String): Dataset[T] = {
     implicit val enc: Encoder[T] = Encoders.product[T]
     recover(table)
-    val rows = liveParts(table).flatMap(snapshotRows[T](table, _)).getOrElse {
+    liveParts(table).flatMap(snapshot[T](table, _)).getOrElse {
       lockFor(table).synchronized {
         recover(table)
-        liveParts(table).fold(Vector.empty[T])(parts =>
-          snapshotRows[T](table, parts).getOrElse(load[T](table, parts)))
+        liveParts(table).fold(spark.emptyDataset[T])(parts =>
+          snapshot[T](table, parts).getOrElse(load[T](table, parts)))
       }
     }
-    spark.createDataset(rows)
   }
 
-  private def snapshotRows[T](table: String, parts: CatalogStore.Parts)(
-      implicit enc: Encoder[T]): Option[Vector[T]] =
+  private def snapshot[T](table: String, parts: CatalogStore.Parts)(
+      implicit enc: Encoder[T]): Option[Dataset[T]] =
     Option(CatalogStore.snapshots.get(tableKey(table)))
-      .filter(s => s.parts == parts && s.cls == enc.clsTag.runtimeClass)
-      .map(_.rows.asInstanceOf[Vector[T]])
+      .filter(s => s.parts == parts && s.cls == enc.clsTag.runtimeClass &&
+                   (s.ds.sparkSession eq spark))
+      .map(_.ds.asInstanceOf[Dataset[T]])
 
-  /** Decode exactly `parts` (one Spark job; caller holds the table lock). */
+  /** Snapshot exactly `parts` (caller holds the table lock): decoded in one
+    * Spark job when their footers count at most `SnapshotMaxRows` rows,
+    * else left as a Spark read of the files. */
   private def load[T](table: String, parts: CatalogStore.Parts)(
-      implicit enc: Encoder[T]): Vector[T] = {
-    val rows =
-      if (parts.isEmpty) Vector.empty[T]
-      else spark.read.schema(enc.schema)
-        .parquet(parts.keys.toSeq.map(f => dir(table).resolve(f).toString): _*)
-        .as[T].collect().toVector
-    publish(table, parts, rows)
-    rows
+      implicit enc: Encoder[T]): Dataset[T] =
+    publish(table, parts,
+      if (rowCount(table, parts) > CatalogStore.SnapshotMaxRows) None
+      else Some(scan[T](table, parts).collect().toVector))
+
+  /** Record `parts` as the table's snapshot (caller holds the table lock).
+    * `rows` are what those files hold, if known; within `SnapshotMaxRows`
+    * they become a `LocalRelation` built once here, so a hit does no
+    * encoding. Otherwise the snapshot is a read of the files. */
+  private def publish[T](table: String, parts: CatalogStore.Parts,
+                         rows: Option[Vector[T]])(implicit enc: Encoder[T]): Dataset[T] = {
+    val local = rows.filter(_.size <= CatalogStore.SnapshotMaxRows)
+    val ds = local.fold(scan[T](table, parts))(spark.createDataset(_))
+    CatalogStore.snapshots.put(tableKey(table),
+      CatalogStore.Snapshot(parts, enc.clsTag.runtimeClass, ds, local.isDefined))
+    ds
   }
 
-  private def publish[T](table: String, parts: CatalogStore.Parts, rows: Vector[T])(
-      implicit enc: Encoder[T]): Unit =
-    CatalogStore.snapshots.put(tableKey(table),
-      CatalogStore.Snapshot(parts, enc.clsTag.runtimeClass, rows))
+  /** A Spark read of the live directory, which under the table lock holds
+    * exactly `parts`. The listing is taken now; the files are opened when
+    * the Dataset runs. */
+  private def scan[T](table: String, parts: CatalogStore.Parts)(
+      implicit enc: Encoder[T]): Dataset[T] =
+    if (parts.isEmpty) spark.emptyDataset[T]
+    else spark.read.schema(enc.schema).parquet(dir(table).toString).as[T]
+
+  /** Rows in `parts` by their parquet footers (no Spark job), counting no
+    * further than one past `SnapshotMaxRows`. An unreadable footer throws. */
+  private def rowCount(table: String, parts: CatalogStore.Parts): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    parts.keysIterator.foldLeft(0L) { (n, f) =>
+      if (n > CatalogStore.SnapshotMaxRows) n
+      else {
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new HPath(dir(table).resolve(f).toUri), conf))
+        try n + r.getRecordCount finally r.close()
+      }
+    }
+  }
 
   /** (table, name, size, mtime) of part files that passed [[liveParts]]'s
     * magic check. */
@@ -174,14 +215,12 @@ final class CatalogStore(spark: SparkSession, root: String) {
     * future read of the table nor be skipped silently. */
   private def liveParts(table: String): Option[CatalogStore.Parts] = {
     val d = dir(table)
+    if (!Files.exists(d)) return None
     try {
-      val s = Files.list(d)
-      val files =
-        try s.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet")).toVector
-        finally s.close()
-      Some(files.flatMap { p =>
+      Some(parquetFiles(d).toSeq.flatMap { f =>
+        val p = d.resolve(f)
         val a = Files.readAttributes(p, classOf[BasicFileAttributes])
-        val (f, size, mtime) = (p.getFileName.toString, a.size, a.lastModifiedTime.toMillis)
+        val (size, mtime) = (a.size, a.lastModifiedTime.toMillis)
         if (validatedParts.contains((table, f, size, mtime))) Some(f -> (size, mtime))
         else hasParquetMagic(p) match {
           case Some(true) =>
@@ -255,7 +294,7 @@ final class CatalogStore(spark: SparkSession, root: String) {
   private def rewrite[T <: Product: TypeTag](table: String, rows: Seq[T]): Unit = {
     implicit val enc: Encoder[T] = Encoders.product[T]
     overwrite(spark.createDataset(rows), table)
-    liveParts(table).foreach(publish(table, _, rows.toVector))
+    liveParts(table).foreach(publish(table, _, Some(rows.toVector)))
   }
 
   /** Append rows (log tables — task_logs / sql_alert_logs / notification_logs
@@ -265,20 +304,21 @@ final class CatalogStore(spark: SparkSession, root: String) {
     * first and the collected rows written, so a snapshot of the pre-append
     * files is extended with exactly what landed on disk; a log table's
     * snapshot stays a hit across appends instead of re-reading its whole
-    * history after every tick. */
+    * history after every tick. A snapshot past `SnapshotMaxRows` stays a
+    * read of the files: appends only add rows. */
   def append[T](ds: Dataset[T], table: String): Unit = lockFor(table).synchronized {
+    implicit val enc: Encoder[T] = ds.encoder
     recover(table)
     val rows = ds.collect().toVector
     val before = liveParts(table)
-    spark.createDataset(rows)(ds.encoder)
-      .write.mode(SaveMode.Append).parquet(dir(table).toString)
-    val key = tableKey(table)
-    val prior = Option(CatalogStore.snapshots.get(key))
-      .filter(s => before.contains(s.parts) && s.cls == ds.encoder.clsTag.runtimeClass)
+    spark.createDataset(rows).write.mode(SaveMode.Append).parquet(dir(table).toString)
+    val prior = Option(CatalogStore.snapshots.get(tableKey(table)))
+      .filter(s => before.contains(s.parts) && s.cls == enc.clsTag.runtimeClass &&
+                   (s.ds.sparkSession eq spark))
     (prior, liveParts(table)) match {
-      case (Some(s), Some(after)) =>
-        CatalogStore.snapshots.put(key, s.copy(parts = after, rows = s.rows ++ rows))
-      case _ => CatalogStore.snapshots.remove(key)
+      case (Some(s), Some(after)) => publish(table, after, Option.when(s.decoded)(
+        s.ds.asInstanceOf[Dataset[T]].collect().toVector ++ rows))
+      case _ => CatalogStore.snapshots.remove(tableKey(table))
     }
   }
 
@@ -292,12 +332,13 @@ final class CatalogStore(spark: SparkSession, root: String) {
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Names of the part files in `p` (empty when `p` is absent) — the one
+    * definition of what a part file is. */
   private def parquetFiles(p: Path): Set[String] =
     if (!Files.exists(p)) Set.empty
     else {
       val s = Files.list(p)
-      try s.filter(f => f.getFileName.toString.endsWith(".parquet"))
-        .map[String](_.getFileName.toString).toArray.map(_.toString).toSet
+      try s.iterator.asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
       finally s.close()
     }
 
@@ -445,8 +486,15 @@ object CatalogStore {
   /** Live part files of a table: name → (size, mtime). */
   private type Parts = Map[String, (Long, Long)]
 
-  /** A table's decoded rows and the exact part-file set they came from. */
-  private final case class Snapshot(parts: Parts, cls: Class[_], rows: Vector[Any])
+  /** What a read of a table returns while its part files are `parts`: their
+    * rows as a `LocalRelation` (`decoded`), or a Spark read of the files. */
+  private final case class Snapshot(parts: Parts, cls: Class[_], ds: Dataset[_],
+                                    decoded: Boolean)
+
+  /** Most rows a table's snapshot holds on the driver (1.5 MiB of
+    * `task_logs`; the reference ships 2,992). Within it a hit runs no Spark
+    * job; past it every read scans the files. */
+  private[catalog] val SnapshotMaxRows = 10000
 
   /** One snapshot per table, keyed like [[tableLocks]] so every store
     * instance over a root shares it. Writers replace it under the table

@@ -53,9 +53,10 @@ object GraftSession {
     // genuinely selective cases (injection fires — PlanAuditSpec).
     .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     // NOTE: spark.sql.files.ignoreMissingFiles stays FALSE (default) — a
-    // read must fail loudly on incomplete input. Catalog reads need no
-    // exception: CatalogStore decodes an explicit file list under the
-    // table lock, so no swap can move a file out from under the scan.
+    // read must fail loudly on incomplete input, catalog reads included:
+    // CatalogStore decodes a table under its writer lock, and a scan of a
+    // table too large to decode that races a compaction swap fails rather
+    // than returning fewer rows.
     // parquet: µs timestamps for cross-engine parity; 128 MB splits keep
     // scan tasks uniform on large files
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

@@ -382,7 +382,8 @@ final class AdminApi(
 
   /** Most recent log row for a task — filter + TakeOrdered(1) in Spark:
     * the log tables are the unbounded catalog tables under a days-long
-    * 1 s-tick daemon; only single rows may reach the driver. */
+    * 1 s-tick daemon; past CatalogStore's SnapshotMaxRows they are scanned,
+    * not held on the driver, and only single rows may reach it. */
   private def latestTaskLog(id: Long): Option[TaskLog] =
     store.read[TaskLog]("task_logs").filter(col("taskId") === id)
       .orderBy(col("executionTime").desc).limit(1).collect().headOption
@@ -403,7 +404,8 @@ final class AdminApi(
     * filtered variant lives on HttpApi). Newest first, like the reference.
     * Latest status aggregates IN SPARK (one map-combined max-struct per
     * task) — task_logs is the one catalog table that is NOT driver-small
-    * in a long-lived deployment. */
+    * in a long-lived deployment (past CatalogStore's SnapshotMaxRows it is
+    * scanned, not held on the driver). */
   private def listTasks(): (Int, Any) = {
     val latest = store.read[TaskLog]("task_logs")
       .groupBy("taskId")

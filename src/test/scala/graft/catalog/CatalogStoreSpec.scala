@@ -524,6 +524,22 @@ class CatalogStoreSpec extends SparkSuite {
     } == 0)
   }
 
+  test("a table past SnapshotMaxRows is read from its files, not held on the driver") {
+    val store = new CatalogStore(spark, tmpDir("cat"))
+    import spark.implicits._
+    val max = CatalogStore.SnapshotMaxRows
+    store.overwrite((1 to max + 1).map(log).toDS(), "task_logs")
+    // the miss counts rows by the footers and decodes nothing
+    assert(jobsDuring(store.read[TaskLog]("task_logs")) == 0)
+    // so every read scans the files
+    assert(jobsDuring(assert(store.read[TaskLog]("task_logs").count() == max + 1)) >= 1)
+    store.append(spark.createDataset(Seq(log(max + 2))), "task_logs")
+    assert(jobsDuring(assert(store.read[TaskLog]("task_logs").count() == max + 2)) >= 1)
+    // back within the bound, the rewrite's rows are the snapshot again
+    store.delete[TaskLog]("task_logs", _.id > max)
+    assert(jobsDuring(assert(logIds(store) == (1L to max.toLong))) == 0)
+  }
+
   test("HttpApi's token check over snapshot suppliers starts no Spark job") {
     import java.net.URI
     import java.net.http.{HttpClient, HttpRequest, HttpResponse}
