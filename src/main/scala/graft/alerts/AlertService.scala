@@ -53,14 +53,14 @@ final class AlertService(
       res <- runCheck(alert, script, now)
     } yield res
 
-    // advance last_check / next_check regardless of outcome (3388, 3485)
-    alerts.find(_.id == alertId).foreach { a =>
-      val next = a.cronExpression.filter(_.trim.nonEmpty)
-        .map(c => Policies.nextRun(Some(c), DefaultCadenceSeconds, now))
-      store.upsert[SqlAlert]("sql_alerts", Seq(a.copy(
-        lastCheck = Some(java.sql.Timestamp.valueOf(now)),
-        nextCheck = next.map(java.sql.Timestamp.valueOf))), _.id)
-    }
+    // advance last_check / next_check regardless of outcome (3388, 3485),
+    // on the CURRENT row: an admin edit (disable, new threshold or cron)
+    // landing while the check ran must survive, so only the stamps move
+    store.updateRows[SqlAlert]("sql_alerts", _.id == alertId, a => a.copy(
+      lastCheck = Some(java.sql.Timestamp.valueOf(now)),
+      nextCheck = a.cronExpression.filter(_.trim.nonEmpty)
+        .map(c => java.sql.Timestamp.valueOf(
+          Policies.nextRun(Some(c), DefaultCadenceSeconds, now)))))
     result
   }
 

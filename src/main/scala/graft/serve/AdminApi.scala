@@ -511,8 +511,9 @@ final class AdminApi(
 
   /** POST /api/tasks/{id}/toggle (web_scheduler.py:4947-4964) — F12. */
   private def toggleTask(id: Long): (Int, Any) = {
-    tasks().find(_.id == id).foreach(t =>
-      store.upsert[Task]("tasks", Seq(t.copy(isActive = !t.isActive)), _.id))
+    // flip the CURRENT row under the table lock: an upsert of a row read
+    // earlier would revert a next_run the scheduler stamped in between
+    store.updateRows[Task]("tasks", _.id == id, t => t.copy(isActive = !t.isActive))
     (200, Json.obj("message" -> "任务状态已更新"))
   }
 

@@ -36,4 +36,32 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously but in order, so two marked sentinel jobs bracket the
+    * count: nothing before the first or after the second is included. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (open, close) = (java.util.UUID.randomUUID.toString, java.util.UUID.randomUUID.toString)
+    val counted = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
+          case `open` => counted.set(0)
+          case `close` => done.countDown()
+          case _ => if (done.getCount > 0 && counted.get >= 0) counted.incrementAndGet()
+        }
+    }
+    def sentinel(marker: String): Unit = {
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel(open); body; sentinel(close)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -78,4 +78,24 @@ class AlertServiceSpec extends SparkSuite {
       LocalDateTime.of(2026, 2, 1, 9, 5)))
     assert(!svc2.isDue(a2, t0.plusMinutes(3)) && svc2.isDue(a2, t0.plusMinutes(5)))
   }
+
+  test("an admin edit landing during a check survives the check's last_check stamp") {
+    val (store, _, _) = fixture("rows_gt", 10)
+    // the edit arrives while the check runs, as AdminApi's PUT writes it
+    val editing = new Notifier {
+      def send(recipients: Seq[String], subject: String, body: String,
+               attachments: Seq[String]): Either[String, Unit] = {
+        val a = store.read[SqlAlert]("sql_alerts").collect().head
+        store.upsert[SqlAlert]("sql_alerts",
+          Seq(a.copy(isEnabled = false, threshold = 99)), _.id)
+        Right(())
+      }
+    }
+    val svc = new AlertService(spark, store, editing, tmpDir("alert_export"),
+      clock = () => t0)
+    assert(svc.check(5L).exists(_.triggered))
+    val a = store.read[SqlAlert]("sql_alerts").collect().head
+    assert(!a.isEnabled && a.threshold == 99, "the edit was reverted")
+    assert(a.lastCheck.map(_.toLocalDateTime).contains(t0))
+  }
 }

@@ -4,6 +4,8 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+
 import graft.SparkSuite
 import graft.catalog.Model._
 
@@ -357,34 +359,6 @@ class CatalogStoreSpec extends SparkSuite {
     finally s.close()
   }
 
-  /** Spark jobs started while `body` runs. Listener events arrive
-    * asynchronously but in order, so two marked sentinel jobs bracket the
-    * count: nothing before the first or after the second is included. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val (open, close) = (java.util.UUID.randomUUID.toString, java.util.UUID.randomUUID.toString)
-    val counted = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.job.description")).orNull match {
-          case `open` => counted.set(0)
-          case `close` => done.countDown()
-          case _ => if (done.getCount > 0 && counted.get >= 0) counted.incrementAndGet()
-        }
-    }
-    def sentinel(marker: String): Unit = {
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel(open); body; sentinel(close)
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
-      counted.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("readers racing 50 updateRows swaps always see every row") {
     val store = new CatalogStore(spark, tmpDir("cat"))
     import spark.implicits._
@@ -578,5 +552,113 @@ class CatalogStoreSpec extends SparkSuite {
         assert(status("nope") == 401)
       } == 0)
     } finally api.stop()
+  }
+
+  // ---- driver-side part-file writer ---------------------------------------
+
+  test("writes of driver-held rows start no Spark job; a fresh Spark read returns the same rows") {
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    import spark.implicits._
+    val stamped = mkTask(1, "a").copy(scriptPath = Some("s.py"),
+      lastRun = Some(ts("2026-03-04 05:06:07.123456")), dependencies = Some("2"))
+    store.overwrite(Seq(stamped, mkTask(2, "b")).toDS(), "tasks")
+    store.read[Task]("tasks").collect() // the miss an overwrite leaves
+    assert(jobsDuring(store.upsert[Task]("tasks", Seq(mkTask(3, "c")), _.id)) == 0)
+    assert(jobsDuring(assert(
+      store.updateRows[Task]("tasks", _.id == 2L, _.copy(name = "b2")) == 1)) == 0)
+    assert(jobsDuring(assert(store.delete[Task]("tasks", _.id == 3L) == 1L)) == 0)
+    store.append(Seq(log(1)).toDS(), "task_logs")
+    logIds(store) // the first read of a new table misses
+    val later = TaskLog(2, 10, "failed", "", ts("2026-03-04 05:06:07.654321"))
+    assert(jobsDuring(store.append(Seq(later).toDS(), "task_logs")) == 0)
+    // reads that bypass the snapshot decode the driver-written files alike
+    val tasks = spark.read.schema(Encoders.product[Task].schema)
+      .parquet(s"$root/tasks").as[Task].collect().sortBy(_.id).toSeq
+    assert(tasks == Seq(stamped, mkTask(2, "b2")))
+    assert(tasks == store.read[Task]("tasks").collect().sortBy(_.id).toSeq)
+    val logs = spark.read.schema(Encoders.product[TaskLog].schema)
+      .parquet(s"$root/task_logs").as[TaskLog].collect().sortBy(_.id).toSeq
+    assert(logs == Seq(log(1), later))
+  }
+
+  test("compaction over older Spark-written and driver-written parts keeps every row") {
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    import spark.implicits._
+    // parts as a Spark job writes them, then parts the store writes itself
+    (1 to 3).foreach(i => Seq(log(i)).toDS().write.mode("append").parquet(s"$root/task_logs"))
+    (4 to 6).foreach(i => store.append(Seq(log(i)).toDS(), "task_logs"))
+    assert(partFiles(java.nio.file.Paths.get(root, "task_logs")).size == 6)
+    assert(store.compactIfFragmented[TaskLog]("task_logs", maxFiles = 4, numPartitions = 2))
+    assert(logIds(store) == (1L to 6L))
+    assert(spark.read.parquet(s"$root/task_logs").as[TaskLog].collect()
+      .sortBy(_.id).toSeq == (1 to 6).map(log))
+  }
+
+  test("a part file a crash left in .staging or .tmp is never live; the next write clears it") {
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    import spark.implicits._
+    (1 to 2).foreach(i => store.append(Seq(log(i)).toDS(), "task_logs"))
+    val live = Paths.get(root, "task_logs")
+    val parts = partFiles(live)
+    val scratch = Seq("task_logs.staging", "task_logs.tmp").map(Paths.get(root, _))
+    scratch.foreach { d => // a JVM death mid-write: header written, no footer
+      Files.createDirectories(d)
+      Files.write(d.resolve("part-00000-partial-c000.snappy.parquet"),
+        ("PAR1" + "x" * 64).getBytes("US-ASCII"))
+    }
+    assert(logIds(store) == Seq(1L, 2L))
+    assert(partFiles(live) == parts)
+    store.append(Seq(log(3)).toDS(), "task_logs")
+    assert(scratch.forall(!Files.exists(_)))
+    assert(logIds(store) == Seq(1L, 2L, 3L))
+    assert(!Files.exists(Paths.get(root, "task_logs.quarantine")), "nothing torn reached live")
+  }
+
+  test("a write that fails after opening its part file leaves the table as it was") {
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("cat")
+    val store = new CatalogStore(spark, root)
+    implicit val enc: Encoder[CatalogStoreSpec.Bomb] =
+      Encoders.javaSerialization[CatalogStoreSpec.Bomb]
+    def rows(ids: Long*) = spark.createDataset(ids.map(new CatalogStoreSpec.Bomb(_)))
+    val live = Paths.get(root, "bombs")
+    def liveIds = spark.read.parquet(live.toString).as[CatalogStoreSpec.Bomb]
+      .collect().map(_.id).sorted.toSeq
+    store.overwrite(rows(1), "bombs")
+    val writes = Seq[(Dataset[CatalogStoreSpec.Bomb] => Unit, String)](
+      (store.overwrite(_, "bombs"), "bombs.tmp"),
+      (store.append(_, "bombs"), "bombs.staging"))
+    writes.zipWithIndex.foreach { case ((write, scratch), i) =>
+      val before = (partFiles(live), liveIds)
+      val doomed = rows(10, CatalogStoreSpec.Bomb.Armed, 11)
+      CatalogStoreSpec.Bomb.fuse.set(true)
+      try intercept[Exception](write(doomed))
+      finally CatalogStoreSpec.Bomb.fuse.set(false)
+      assert(partFiles(Paths.get(root, scratch)).nonEmpty, "the write died mid-file")
+      assert((partFiles(live), liveIds) == before)
+      store.append(rows(2L + i), "bombs")
+      assert(!Files.exists(Paths.get(root, scratch)))
+    }
+    assert(liveIds == Seq(1L, 2L, 3L))
+  }
+}
+
+object CatalogStoreSpec {
+  /** A row whose Java serialization throws while `fuse` is set and its id is
+    * `Armed`: encoding it fails partway through a write. */
+  final class Bomb(val id: Long) extends Serializable {
+    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+      if (id == Bomb.Armed && Bomb.fuse.get)
+        throw new IllegalStateException("row refuses to encode")
+      out.defaultWriteObject()
+    }
+  }
+  object Bomb {
+    val Armed = -1L
+    val fuse = new java.util.concurrent.atomic.AtomicBoolean(false)
   }
 }

@@ -172,4 +172,19 @@ class SchedulerSpec extends SparkSuite {
     assert(sched2.tick().map(_.action) == Seq("not_due"))
     assert(executed2.isEmpty)
   }
+
+  test("a tick's next_run stamps and run logs start no Spark job; only its log window does") {
+    var now = t0
+    val (store, _, _) = fixture((1L to 3L).map(mkTask(_)), Map.empty)
+    val timed = new Scheduler(spark, store, _ => Right("ok"), clock = () => now)
+    assert(timed.tick().map(_.action) == Seq.fill(3)("executed"))
+    store.read[TaskLog]("task_logs").collect() // first read of the new log table
+    now = t0.plusSeconds(300) // every task due again
+    val running = jobsDuring(assert(timed.tick().map(_.action) == Seq.fill(3)("executed")))
+    // same reads and the same log window, nothing due: no stamp, no log
+    val idle = jobsDuring(assert(timed.tick().map(_.action) == Seq.fill(3)("not_due")))
+    assert(idle >= 1, "the top-K window over task_logs is a Spark query")
+    assert(running == idle, s"3 stamps + 3 appends started ${running - idle} jobs")
+    assert(store.read[TaskLog]("task_logs").count() == 6)
+  }
 }
