@@ -5,7 +5,7 @@ import java.nio.file.attribute.BasicFileAttributes
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
-import scala.reflect.runtime.universe.TypeTag
+import scala.reflect.runtime.universe.{Type, TypeTag, typeTag}
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
@@ -13,8 +13,12 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.graftshim.PlanShim
 
 /** Mutable metadata catalog over immutable Parquet — the reference's SQLite
   * CRUD surface (SURVEY.md §2.11 D1-D7) as read→transform→overwrite with a
@@ -53,15 +57,22 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, Parqu
   * [[read]]). A table holds its rows on the driver only up to
   * [[CatalogStore.SnapshotMaxRows]]; past that its snapshot is a Spark read
   * of its part files, so driver heap is bounded by the table count times
-  * that many rows however long a deployment keeps its logs. Measured for
-  * `task_logs` rows (~40-character messages; `SizeEstimator` over the
-  * `LocalRelation`'s rows; medians of 21 hits; 4-core container, JDK 17,
-  * Spark 4.1.2):
+  * that many rows however long a deployment keeps its logs. Within the
+  * bound a snapshot is a `LocalRelation`, and the store registers
+  * [[LocalFold]] on its session, so the joins, sorts, windows and
+  * aggregates that the API, the scheduler and the admin routes run over
+  * snapshots are evaluated on the driver and start no Spark job either.
+  * What stays a Spark job: the decode of a table on a snapshot miss, every
+  * read past the bound, compaction, and any query shape that `LocalFold`
+  * leaves to Spark. Measured for `task_logs` rows (~40-character messages;
+  * `SizeEstimator` over the `LocalRelation`'s rows; medians of 21 hits;
+  * 4-core container, JDK 17, Spark 4.1.2):
   *  - 2,992 rows (the reference's shipped `scheduler.db`): 0.45 MiB
   *    retained; a hit of `read[TaskLog]("task_logs")` 2.6 ms, 7.7 ms with
   *    `.collect()`;
-  *  - 10,000 rows (the bound): 1.49 MiB (157 B/row); a hit 0.9 ms, 6.4 ms
-  *    with `.collect()`, 137 ms for the scheduler's top-K window;
+  *  - 10,000 rows (the bound): 1.49 MiB (157 B/row); `.collect()` of a hit
+  *    3.5 ms, the scheduler's top-K window 45 ms, folded (190 ms as Spark
+  *    jobs); a one-row append 18–21 ms, as at 100 rows;
   *  - 100k rows: nothing retained; every read is a Spark scan (`.collect()`
   *    96 ms, the window 129 ms, on a freshly overwritten table).
   */
@@ -84,6 +95,10 @@ final class CatalogStore(spark: SparkSession, root: String) {
       "two processes must not write one catalog (reference parity: one " +
       "scheduler process per scheduler.db). Point this instance at its " +
       "own root, or stop the other process.")
+
+  // snapshots are LocalRelations; the rule folds the joins, sorts, windows
+  // and aggregates the catalog's readers run over them
+  LocalFold.setup(spark)
 
   private def dir(table: String): Path = Paths.get(root, table)
 
@@ -160,7 +175,7 @@ final class CatalogStore(spark: SparkSession, root: String) {
     * the lock: a compaction swap landing in between fails that read with a
     * missing file rather than returning fewer rows. */
   def read[T <: Product: TypeTag](table: String): Dataset[T] = {
-    implicit val enc: Encoder[T] = Encoders.product[T]
+    implicit val enc: Encoder[T] = CatalogStore.encoder[T]
     recover(table)
     liveParts(table).flatMap(snapshot[T](table, _)).getOrElse {
       lockFor(table).synchronized {
@@ -174,8 +189,7 @@ final class CatalogStore(spark: SparkSession, root: String) {
   private def snapshot[T](table: String, parts: CatalogStore.Parts)(
       implicit enc: Encoder[T]): Option[Dataset[T]] =
     Option(CatalogStore.snapshots.get(tableKey(table)))
-      .filter(s => s.parts == parts && s.cls == enc.clsTag.runtimeClass &&
-                   (s.ds.sparkSession eq spark))
+      .filter(s => s.parts == parts && s.cls == enc.clsTag.runtimeClass && (s.spark eq spark))
       .map(_.ds.asInstanceOf[Dataset[T]])
 
   /** Snapshot exactly `parts` (caller holds the table lock): decoded in one
@@ -185,19 +199,38 @@ final class CatalogStore(spark: SparkSession, root: String) {
       implicit enc: Encoder[T]): Dataset[T] =
     publish(table, parts,
       if (rowCount(table, parts) > CatalogStore.SnapshotMaxRows) None
-      else Some(scan[T](table, parts).collect().toVector))
+      else Some(encoded(scan[T](table, parts).collect()).toVector)
+    ).ds.asInstanceOf[Dataset[T]]
+
+  /** `rows` as the `InternalRow`s that a `LocalRelation` and the Parquet
+    * writer take, each encoded as it is reached. */
+  private def encoded[T](rows: Iterable[T])(implicit enc: Encoder[T]): Iterator[InternalRow] = {
+    val toRow = encoderFor(enc).createSerializer()
+    rows.iterator.map(toRow(_).copy())
+  }
 
   /** Record `parts` as the table's snapshot (caller holds the table lock).
-    * `rows` are what those files hold, if known; within `SnapshotMaxRows`
-    * they become a `LocalRelation` built once here, so a hit does no
-    * encoding. Otherwise the snapshot is a read of the files. */
+    * `rows` are what those files hold, encoded, if known; within
+    * `SnapshotMaxRows` they become the data of a `LocalRelation`, built at
+    * the first read (Spark analyses a new Dataset in time that grows with
+    * its rows, and a log table may take several appends between reads), so
+    * a hit does no encoding. Otherwise the snapshot is a read of the files,
+    * listed now, under the lock. */
   private def publish[T](table: String, parts: CatalogStore.Parts,
-                         rows: Option[Vector[T]])(implicit enc: Encoder[T]): Dataset[T] = {
-    val local = rows.filter(_.size <= CatalogStore.SnapshotMaxRows)
-    val ds = local.fold(scan[T](table, parts))(spark.createDataset(_))
-    CatalogStore.snapshots.put(tableKey(table),
-      CatalogStore.Snapshot(parts, enc.clsTag.runtimeClass, ds, local.isDefined))
-    ds
+                         rows: Option[Vector[InternalRow]])(
+      implicit enc: Encoder[T]): CatalogStore.Snapshot = {
+    def snapshot(rows: Option[Vector[InternalRow]], ds: => Dataset[T]) =
+      new CatalogStore.Snapshot(parts, enc.clsTag.runtimeClass, spark, rows, ds)
+    val s = rows.filter(_.size <= CatalogStore.SnapshotMaxRows) match {
+      case local @ Some(r) =>
+        snapshot(local, PlanShim.dataset[T](spark,
+          LocalRelation(DataTypeUtils.toAttributes(enc.schema), r)))
+      case None =>
+        val files = scan[T](table, parts)
+        snapshot(None, files)
+    }
+    CatalogStore.snapshots.put(tableKey(table), s)
+    s
   }
 
   /** A Spark read of the live directory, which under the table lock holds
@@ -307,26 +340,28 @@ final class CatalogStore(spark: SparkSession, root: String) {
 
   /** The swap behind [[overwrite]] for rows already on the driver (caller
     * holds the table lock). The displaced rows no longer match any listing,
-    * so their snapshot is dropped. */
-  private def replace[T](table: String, rows: Seq[T])(implicit enc: Encoder[T]): Unit = {
+    * so their snapshot is dropped. Returns the rows as written, encoded. */
+  private def replace[T](table: String, rows: Seq[T])(
+      implicit enc: Encoder[T]): Vector[InternalRow] = {
     recover(table)
     val live = dir(table)
     val tmp = Paths.get(root, table + ".tmp")
     val bak = Paths.get(root, table + ".bak")
     clearScratch(table); deleteRecursively(bak)
-    writePart(tmp, rows)
+    val (_, written) = writePart(tmp, rows)
     if (Files.exists(live)) Files.move(live, bak, StandardCopyOption.ATOMIC_MOVE)
     Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
     deleteRecursively(bak)
     CatalogStore.snapshots.remove(tableKey(table))
+    written
   }
 
   /** [[replace]], after which the written rows become the table's snapshot:
     * the next read is a hit, not a Spark read. Caller holds the table lock. */
   private def rewrite[T <: Product: TypeTag](table: String, rows: Seq[T]): Unit = {
-    implicit val enc: Encoder[T] = Encoders.product[T]
-    replace(table, rows)
-    liveParts(table).foreach(publish(table, _, Some(rows.toVector)))
+    implicit val enc: Encoder[T] = CatalogStore.encoder[T]
+    val written = replace(table, rows)
+    liveParts(table).foreach(publish(table, _, Some(written)))
   }
 
   /** Append rows (log tables — task_logs / sql_alert_logs / notification_logs
@@ -335,26 +370,26 @@ final class CatalogStore(spark: SparkSession, root: String) {
     * collected, written as one part file into `<table>.staging` and moved
     * into the live directory whole, so a reader never lists a half-written
     * part. A snapshot of the pre-append files is then extended with exactly
-    * those rows; a log table's snapshot stays a hit across appends instead
-    * of re-reading its whole history after every tick. A snapshot past
+    * those rows, encoded once for the file and the snapshot alike, so a log
+    * table's snapshot stays a hit across appends, and an append costs time
+    * in proportion to the rows it adds, not to the table. A snapshot past
     * `SnapshotMaxRows` stays a read of the files: appends only add rows. */
   def append[T](ds: Dataset[T], table: String): Unit = lockFor(table).synchronized {
     implicit val enc: Encoder[T] = ds.encoder
     recover(table)
-    val rows = ds.collect().toVector
+    val rows = ds.collect().toSeq
     val before = liveParts(table)
     val staging = Paths.get(root, table + ".staging")
     clearScratch(table)
-    val part = writePart(staging, rows)
+    val (part, written) = writePart(staging, rows)
     Files.createDirectories(dir(table))
     moveWithCrc(staging, dir(table), part)
     deleteRecursively(staging)
     val prior = Option(CatalogStore.snapshots.get(tableKey(table)))
       .filter(s => before.contains(s.parts) && s.cls == enc.clsTag.runtimeClass &&
-                   (s.ds.sparkSession eq spark))
+                   (s.spark eq spark))
     (prior, liveParts(table)) match {
-      case (Some(s), Some(after)) => publish(table, after, Option.when(s.decoded)(
-        s.ds.asInstanceOf[Dataset[T]].collect().toVector ++ rows))
+      case (Some(s), Some(after)) => publish(table, after, s.rows.map(_ ++ written))
       case _ => CatalogStore.snapshots.remove(tableKey(table))
     }
   }
@@ -368,12 +403,14 @@ final class CatalogStore(spark: SparkSession, root: String) {
   }
 
   /** Write `rows` as one new part file in `into` (created if absent) and
-    * return its name. This is Spark's own Parquet writer, set up from this
-    * session's conf the way `FileFormatWriter` sets it up (timestamp type,
-    * codec, rebase modes), but called on the driver: no Spark job, no task,
-    * no commit protocol. Callers write only into a scratch directory and
-    * move the finished file in. */
-  private def writePart[T](into: Path, rows: Seq[T])(implicit enc: Encoder[T]): String = {
+    * return its name and the rows as encoded for it, which a snapshot then
+    * holds without encoding them again. This is Spark's own Parquet writer,
+    * set up from this session's conf the way `FileFormatWriter` sets it up
+    * (timestamp type, codec, rebase modes), but called on the driver: no
+    * Spark job, no task, no commit protocol. Callers write only into a
+    * scratch directory and move the finished file in. */
+  private def writePart[T](into: Path, rows: Seq[T])(
+      implicit enc: Encoder[T]): (String, Vector[InternalRow]) = {
     val conf = spark.sessionState.conf
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val factory = ParquetUtils.prepareWrite(conf, job, enc.schema,
@@ -382,9 +419,12 @@ final class CatalogStore(spark: SparkSession, root: String) {
     val name = s"part-00000-${UUID.randomUUID}-c000${factory.getFileExtension(ctx)}"
     Files.createDirectories(into)
     val out = factory.newInstance(into.resolve(name).toUri.toString, enc.schema, ctx)
-    val toRow = encoderFor(enc).createSerializer()
-    try rows.foreach(r => out.write(toRow(r))) finally out.close()
-    name
+    val written = Vector.newBuilder[InternalRow]
+    try encoded(rows).foreach { row =>
+      out.write(row)
+      written += row
+    } finally out.close()
+    (name, written.result())
   }
 
   /** Move a part file AND its hidden ChecksumFileSystem `.crc` sibling, so
@@ -460,7 +500,7 @@ final class CatalogStore(spark: SparkSession, root: String) {
       liveParts(table).fold(Set.empty[String])(_.keySet)
     }
     if (snapshot.size <= maxFiles) return false
-    implicit val enc: Encoder[T] = Encoders.product[T]
+    implicit val enc: Encoder[T] = CatalogStore.encoder[T]
     spark.read.schema(enc.schema)
       .parquet(snapshot.toSeq.map(f => live.resolve(f).toString): _*)
       .repartition(numPartitions)
@@ -550,13 +590,27 @@ object CatalogStore {
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** The product encoder of each row type, derived once. Deriving one walks
+    * the case class with Scala runtime reflection, which Spark runs under a
+    * JVM-wide lock, and every read and rewrite of a table needs one: the
+    * API's concurrent requests each read several tables. An encoder is
+    * immutable, so one per type serves every store and thread. */
+  private val encoders = new java.util.concurrent.ConcurrentHashMap[Type, Encoder[_]]()
+  private def encoder[T <: Product: TypeTag]: Encoder[T] =
+    encoders.computeIfAbsent(typeTag[T].tpe, _ => Encoders.product[T]).asInstanceOf[Encoder[T]]
+
   /** Live part files of a table: name → (size, mtime). */
   private type Parts = Map[String, (Long, Long)]
 
-  /** What a read of a table returns while its part files are `parts`: their
-    * rows as a `LocalRelation` (`decoded`), or a Spark read of the files. */
-  private final case class Snapshot(parts: Parts, cls: Class[_], ds: Dataset[_],
-                                    decoded: Boolean)
+  /** What a read of a table in `spark` returns while its part files are
+    * `parts`: a `LocalRelation` of their encoded `rows`, or (`rows` empty) a
+    * Spark read of the files. An append extends `rows` as an immutable
+    * `Vector`, in time proportional to the rows it adds; `ds` is built at
+    * the first read. */
+  private final class Snapshot(val parts: Parts, val cls: Class[_], val spark: SparkSession,
+                               val rows: Option[Vector[InternalRow]], dataset: => Dataset[_]) {
+    lazy val ds: Dataset[_] = dataset
+  }
 
   /** Most rows a table's snapshot holds on the driver (1.5 MiB of
     * `task_logs`; the reference ships 2,992). Within it a hit runs no Spark

@@ -53,15 +53,30 @@ object TempDirs {
     * with executor heap for RAM-backed tmpfs. Resolved once: a scratch
     * root that changes mid-JVM would split a query's stage and checkpoint
     * across volumes. */
-  private lazy val scratchRoot: Path = {
-    val candidates =
-      sys.env.get("SPARK_GRAFT_SCRATCH_DIR").map(java.nio.file.Paths.get(_)).toSeq ++
-      Seq(java.nio.file.Paths.get("/dev/shm"),
-          java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
-    candidates.find { d =>
-      try Files.isDirectory(d) && Files.isWritable(d)
-      catch { case _: Exception => false }
-    }.getOrElse(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+  private lazy val scratchRoot: Path =
+    scratchRootFor(sys.env.get("SPARK_GRAFT_SCRATCH_DIR").filter(_.nonEmpty))
+
+  /** The scratch root for a configured directory, if any. A configured
+    * directory is created when absent; one that cannot be created or
+    * written fails with its path, rather than scratch landing silently on
+    * another volume. */
+  private[core] def scratchRootFor(configured: Option[String]): Path = configured match {
+    case Some(dir) =>
+      val d = java.nio.file.Paths.get(dir)
+      try Files.createDirectories(d)
+      catch {
+        case e: java.io.IOException => throw new IllegalStateException(
+          s"SPARK_GRAFT_SCRATCH_DIR '$dir' cannot be created: $e", e)
+      }
+      if (!Files.isWritable(d))
+        throw new IllegalStateException(s"SPARK_GRAFT_SCRATCH_DIR '$dir' is not writable")
+      d
+    case None =>
+      val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+      Seq(java.nio.file.Paths.get("/dev/shm"), tmp).find { d =>
+        try Files.isDirectory(d) && Files.isWritable(d)
+        catch { case _: Exception => false }
+      }.getOrElse(tmp)
   }
 
   /** A fresh SCRATCH directory under [[scratchRoot]], swept at JVM exit —

@@ -50,14 +50,15 @@ final class Scheduler(
     graft.core.GraftSession.usePool(spark, graft.core.GraftSession.TasksPool)
     val now = clock()
     val tasks = store.read[Task]("tasks").collect().filter(_.isActive).sortBy(_.id)
-    // task_logs grows by one row per execution, forever — a days-long
-    // daemon must NOT collect it whole every second (CatalogStore holds a
-    // table on the driver only up to SnapshotMaxRows rows; past that this
-    // read scans the files). The policies only look at each task's most
-    // recent rows (latest status for dependency gating; up to maxRetries+1
-    // consecutive outcomes for the retry window), so keep the top-K per
-    // task via a window — the collected set is bounded by |tasks| × K no
-    // matter how old the deployment is.
+    // task_logs grows by one row per execution, forever, and the policies
+    // only look at each task's most recent rows (latest status for
+    // dependency gating; up to maxRetries+1 consecutive outcomes for the
+    // retry window). So keep the top-K per task via a window: the collected
+    // set is bounded by |tasks| × K no matter how old the deployment is.
+    // Within CatalogStore's SnapshotMaxRows the table is a driver-held
+    // snapshot and graft.catalog.LocalFold evaluates the window on the
+    // driver, with no Spark job; past it the window is a Spark query over
+    // the part files.
     val keep = math.max(10, if (tasks.isEmpty) 0 else tasks.map(_.maxRetries).max + 2)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("taskId")

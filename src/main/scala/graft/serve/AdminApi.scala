@@ -325,8 +325,10 @@ final class AdminApi(
     * panel (the reference's web UI reads logs from the same session-authed
     * app; the token-authed paginated variant lives on HttpApi). task_logs
     * grows unboundedly under a 1 s-tick daemon, so the id filter and the
-    * recent-50 window run IN SPARK (filter pushdown + TakeOrdered) — only
-    * the page reaches the driver. */
+    * recent-50 window are one query and only the page is collected: folded
+    * on the driver within CatalogStore's SnapshotMaxRows
+    * (graft.catalog.LocalFold), filter pushdown + TakeOrdered in Spark
+    * past it. */
   private def routeTaskLogsRead(ex: HttpExchange, method: String,
                                 segs: Seq[String]): (Int, Any) = (method, segs) match {
     case ("GET", Seq("api", "task-logs", IdSeg(id))) =>
@@ -380,10 +382,11 @@ final class AdminApi(
 
   private def tasks(): Seq[Task] = store.read[Task]("tasks").collect().toSeq
 
-  /** Most recent log row for a task — filter + TakeOrdered(1) in Spark:
-    * the log tables are the unbounded catalog tables under a days-long
-    * 1 s-tick daemon; past CatalogStore's SnapshotMaxRows they are scanned,
-    * not held on the driver, and only single rows may reach it. */
+  /** Most recent log row for a task — filter + orderBy + limit(1) as one
+    * query: the log tables are the unbounded catalog tables under a
+    * days-long 1 s-tick daemon; past CatalogStore's SnapshotMaxRows they are
+    * scanned (TakeOrdered in Spark), not held on the driver, and only single
+    * rows may reach it. Within the bound the query folds on the driver. */
   private def latestTaskLog(id: Long): Option[TaskLog] =
     store.read[TaskLog]("task_logs").filter(col("taskId") === id)
       .orderBy(col("executionTime").desc).limit(1).collect().headOption
@@ -402,10 +405,11 @@ final class AdminApi(
   /** GET /api/tasks — session-authed list for the dashboard (the reference
     * renders the same rows into templates/index.html; the token-authed
     * filtered variant lives on HttpApi). Newest first, like the reference.
-    * Latest status aggregates IN SPARK (one map-combined max-struct per
-    * task) — task_logs is the one catalog table that is NOT driver-small
-    * in a long-lived deployment (past CatalogStore's SnapshotMaxRows it is
-    * scanned, not held on the driver). */
+    * Latest status is one max-struct aggregate per task, collected as one
+    * row per task — task_logs is the one catalog table that is NOT
+    * driver-small in a long-lived deployment (past CatalogStore's
+    * SnapshotMaxRows it is scanned and aggregated in Spark; within it the
+    * aggregate folds on the driver). */
   private def listTasks(): (Int, Any) = {
     val latest = store.read[TaskLog]("task_logs")
       .groupBy("taskId")

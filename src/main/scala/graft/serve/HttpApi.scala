@@ -273,15 +273,19 @@ final class HttpApi(spark: SparkSession, deps: HttpApi.Deps) {
           "error" -> "缺少API Token，请在Authorization头中使用\"Bearer YOUR_TOKEN\"格式")))
       case Some(tok) =>
         val now = new java.sql.Timestamp(System.currentTimeMillis())
-        // the token JOIN users as two driver-side lookups: a filter plus
-        // collect/isEmpty over a catalog snapshot (a LocalRelation) runs
-        // no Spark job, where a join would start one on every request.
-        // SQL null semantics are unchanged: a null token/expiry fails the
-        // filter, and a null userId matches no `id IN (...)`.
-        val userIds = deps.userTokens()
-          .filter(col("token") === tok && col("expiresAt") > lit(now))
-          .select("userId").collect().map(_.get(0))
-        if (userIds.isEmpty || deps.users().filter(col("id").isin(userIds: _*)).isEmpty)
+        // user_tokens JOIN users: a null token fails the filter, and a null
+        // userId joins no user. Over catalog snapshots within their bound,
+        // graft.catalog.LocalFold folds the join on the driver, so the
+        // collect starts no Spark job. The expiry is compared here, not in
+        // the query: Spark inlines a timestamp literal into generated code,
+        // so `expiresAt > lit(now)` would compile a new predicate class on
+        // every request (a string literal is passed by reference, so the
+        // token filter compiles once). A null expiry is not live, as in SQL.
+        val live = deps.userTokens().filter(col("token") === tok)
+        val users = deps.users()
+        val expiries = live.join(users, live("userId") === users("id"))
+          .select(live("expiresAt")).collect()
+        if (!expiries.exists(r => !r.isNullAt(0) && r.getTimestamp(0).after(now)))
           Some((401, Json.obj("error" -> "无效或过期的API Token")))
         else None
     }

@@ -183,8 +183,8 @@ class SchedulerSpec extends SparkSuite {
     val running = jobsDuring(assert(timed.tick().map(_.action) == Seq.fill(3)("executed")))
     // same reads and the same log window, nothing due: no stamp, no log
     val idle = jobsDuring(assert(timed.tick().map(_.action) == Seq.fill(3)("not_due")))
-    assert(idle >= 1, "the top-K window over task_logs is a Spark query")
-    assert(running == idle, s"3 stamps + 3 appends started ${running - idle} jobs")
+    // the top-K window over the task_logs snapshot folds on the driver
+    assert(idle == 0 && running == 0, s"ticks started $running (running) and $idle (idle) jobs")
     assert(store.read[TaskLog]("task_logs").count() == 6)
   }
 }

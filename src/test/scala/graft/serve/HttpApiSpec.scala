@@ -17,39 +17,49 @@ class HttpApiSpec extends SparkSuite {
   private val inserted =
     scala.collection.mutable.ListBuffer.empty[(String, Seq[Map[String, Any]])]
 
+  // the catalog rows every API in this spec serves
+  private val taskRows = Seq(
+    Task(1L, "nightly etl", "sql", None, Some(7L), 3600L,
+      Some(ts("2026-01-02 00:00:00")), Some(ts("2026-01-03 00:00:00")),
+      isActive = true, Some("2,3"), 3, 60, None, ts("2026-01-01 00:00:00")),
+    Task(2L, "probe script", "python", Some("scripts/probe.py"), None, 600L,
+      None, None, isActive = false, None, 0, 60, Some("*/5 * * * *"),
+      ts("2026-01-01 00:00:00")))
+  private val logRows = Seq(
+    TaskLog(1L, 1L, "failed", "boom", ts("2026-01-01 10:00:00")),
+    TaskLog(2L, 1L, "success", "ok", ts("2026-01-02 10:00:00")),
+    TaskLog(3L, 1L, "success", "ok again", ts("2026-01-03 10:00:00")))
+  private val scriptRows = Seq(
+    SqlScript(7L, "refresh orders", Some(1L), "SELECT 1", ts("2026-01-01 00:00:00")))
+  private val nlogRows = Seq(
+    NotificationLog(1L, Some(1L), "nightly etl", "failure", Some(4L),
+      "a@x.com,b@x.com", "task failed", "body", "sent", None,
+      ts("2026-01-02 09:00:00")),
+    NotificationLog(2L, Some(1L), "nightly etl", "success", Some(99L),
+      "a@x.com", "task ok", "body", "sent", None,
+      ts("2026-01-03 09:00:00")))
+  private val cfgRows = Seq(
+    EmailConfig(4L, "ops smtp", "smtp.local", 25, mailUseTls = false, "u", "p",
+      "noreply@x.com", notificationEnabled = true, isDefault = true,
+      ts("2026-01-01 00:00:00")))
+  private val userRows = Seq(User(10L, "alice", "salt:hash", ts("2026-01-01 00:00:00")))
+  private val tokenRows = Seq(
+    UserToken(1L, 10L, "good-token", ts("2099-01-01 00:00:00"), ts("2026-01-01 00:00:00")),
+    UserToken(2L, 10L, "expired-token", ts("2020-01-01 00:00:00"), ts("2019-01-01 00:00:00")))
+  private val dbcfgRows = Seq(
+    DbConfig(1L, "warehouse", "mysql", "db.local", 3306, "u", "p",
+      Some("ignored"), ts("2026-01-01 00:00:00")))
+
   private lazy val api: (HttpApi, Int) = {
     import spark.implicits._
-    val tasks = Seq(
-      Task(1L, "nightly etl", "sql", None, Some(7L), 3600L,
-        Some(ts("2026-01-02 00:00:00")), Some(ts("2026-01-03 00:00:00")),
-        isActive = true, Some("2,3"), 3, 60, None, ts("2026-01-01 00:00:00")),
-      Task(2L, "probe script", "python", Some("scripts/probe.py"), None, 600L,
-        None, None, isActive = false, None, 0, 60, Some("*/5 * * * *"),
-        ts("2026-01-01 00:00:00"))).toDF()
-    val logs = Seq(
-      TaskLog(1L, 1L, "failed", "boom", ts("2026-01-01 10:00:00")),
-      TaskLog(2L, 1L, "success", "ok", ts("2026-01-02 10:00:00")),
-      TaskLog(3L, 1L, "success", "ok again", ts("2026-01-03 10:00:00"))).toDF()
-    val scripts = Seq(
-      SqlScript(7L, "refresh orders", Some(1L), "SELECT 1", ts("2026-01-01 00:00:00"))).toDF()
-    val nlogs = Seq(
-      NotificationLog(1L, Some(1L), "nightly etl", "failure", Some(4L),
-        "a@x.com,b@x.com", "task failed", "body", "sent", None,
-        ts("2026-01-02 09:00:00")),
-      NotificationLog(2L, Some(1L), "nightly etl", "success", Some(99L),
-        "a@x.com", "task ok", "body", "sent", None,
-        ts("2026-01-03 09:00:00"))).toDF()
-    val cfgs = Seq(
-      EmailConfig(4L, "ops smtp", "smtp.local", 25, mailUseTls = false, "u", "p",
-        "noreply@x.com", notificationEnabled = true, isDefault = true,
-        ts("2026-01-01 00:00:00"))).toDF()
-    val users = Seq(User(10L, "alice", "salt:hash", ts("2026-01-01 00:00:00"))).toDF()
-    val tokens = Seq(
-      UserToken(1L, 10L, "good-token", ts("2099-01-01 00:00:00"), ts("2026-01-01 00:00:00")),
-      UserToken(2L, 10L, "expired-token", ts("2020-01-01 00:00:00"), ts("2019-01-01 00:00:00"))).toDF()
-    val dbcfgs = Seq(
-      DbConfig(1L, "warehouse", "mysql", "db.local", 3306, "u", "p",
-        Some("ignored"), ts("2026-01-01 00:00:00"))).toDF()
+    val tasks = taskRows.toDF()
+    val logs = logRows.toDF()
+    val scripts = scriptRows.toDF()
+    val nlogs = nlogRows.toDF()
+    val cfgs = cfgRows.toDF()
+    val users = userRows.toDF()
+    val tokens = tokenRows.toDF()
+    val dbcfgs = dbcfgRows.toDF()
 
     val deps = HttpApi.Deps(
       tasks = () => tasks, taskLogs = () => logs, sqlScripts = () => scripts,
@@ -69,10 +79,10 @@ class HttpApiSpec extends SparkSuite {
   // the read routes are token-authed like the insert route (the
   // reference's task/log reads are @login_required — an open read surface
   // would bypass the session-guarded admin API over the same tables)
-  private def get(path: String,
-                  token: Option[String] = Some("good-token")): (Int, Any) = {
+  private def get(path: String, token: Option[String] = Some("good-token"),
+                  port: => Int = api._2): (Int, Any) = {
     val b = HttpRequest.newBuilder(
-      URI.create(s"http://127.0.0.1:${api._2}$path")).GET()
+      URI.create(s"http://127.0.0.1:$port$path")).GET()
     token.foreach(t => b.header("Authorization", s"Bearer $t"))
     val r = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
     (r.statusCode(), Json.parse(r.body()))
@@ -205,6 +215,62 @@ class HttpApiSpec extends SparkSuite {
     assert(inserted.last._1 == "mysql:prod.orders")
     assert(inserted.last._2 == Seq(
       Map("sku" -> "x", "qty" -> 2L), Map("sku" -> "y", "qty" -> 5L)))
+  }
+
+  test("within the catalog's snapshot bound the read routes and the token check start no Spark job") {
+    import spark.implicits._
+    val store = new graft.catalog.CatalogStore(spark, tmpDir("httpapi-catalog"))
+    store.overwrite(taskRows.toDS(), "tasks")
+    store.overwrite(logRows.toDS(), "task_logs")
+    store.overwrite(scriptRows.toDS(), "sql_scripts")
+    store.overwrite(nlogRows.toDS(), "notification_logs")
+    store.overwrite(cfgRows.toDS(), "email_configs")
+    store.overwrite(userRows.toDS(), "users")
+    store.overwrite(tokenRows.toDS(), "user_tokens")
+    store.overwrite(dbcfgRows.toDS(), "db_configs")
+    val catalogApi = new HttpApi(spark, HttpApi.Deps(
+      tasks = () => store.read[Task]("tasks").toDF(),
+      taskLogs = () => store.read[TaskLog]("task_logs").toDF(),
+      sqlScripts = () => store.read[SqlScript]("sql_scripts").toDF(),
+      notificationLogs = () => store.read[NotificationLog]("notification_logs").toDF(),
+      emailConfigs = () => store.read[EmailConfig]("email_configs").toDF(),
+      users = () => store.read[User]("users").toDF(),
+      userTokens = () => store.read[UserToken]("user_tokens").toDF(),
+      dbConfigs = () => store.read[DbConfig]("db_configs").toDF(),
+      insert = (_, _, records) => Right(records.size.toLong)))
+    val port = catalogApi.start()
+    try {
+      val routes = Seq("/api/tasks", "/api/task-logs/1?per_page=2", "/api/notification-logs")
+      // the first request reads each table's files into its snapshot
+      routes.foreach(r => assert(get(r, port = port)._1 == 200))
+      routes.foreach { r =>
+        var answer: (Int, Any) = null
+        val jobs = jobsDuring { answer = get(r, port = port) }
+        assert(answer == get(r), s"$r answers as over the same rows as DataFrames")
+        assert(jobs == 0, s"$r started $jobs Spark jobs")
+      }
+      val rejected = jobsDuring(assert(get("/api/tasks", Some("expired-token"), port)._1 == 401))
+      assert(rejected == 0, s"the token check started $rejected Spark jobs")
+    } finally catalogApi.stop()
+  }
+
+  test("a repeated request compiles no new code, however much later it comes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiledDuring(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    for (token <- Seq("good-token", "expired-token")) {
+      val status = get("/api/task-logs/1", Some(token))._1 // compiles the route's code
+      // the counter is JVM-wide: a repeat that compiles nothing in any of
+      // three tries rules out a compile per request, which every try shows
+      val compiled = (1 to 3).map { _ =>
+        Thread.sleep(5) // a later clock reading than the request before
+        compiledDuring(assert(get("/api/task-logs/1", Some(token))._1 == status))
+      }
+      assert(compiled.contains(0L), s"$token: each repeat compiled code: $compiled")
+    }
   }
 
   test("JSON codec round-trips nested structures") {
