@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.operators.Artifacts
 object Bench {
 
   /** Synthesize a 10× documents + embeddings corpus (hash-generated: 5k-word
@@ -129,18 +130,51 @@ object Bench {
       if (c >= 0) Some(name -> c) else None
     } else None
 
+  /** Build `entries` for the corpus in `dir`, outside any timed section:
+    * artifacts are write-once INGEST work at 100 TB, so the bench of record
+    * measures the query path against a warm warehouse (r5/r6 comparisons
+    * conflated code changes with artifact-cache state); the cold cost is
+    * still recorded, once, as the returned seconds. Each distinct builder
+    * runs once: a corpus-index entry's ensure, or the query that owns the
+    * entry. Failures are printed with their exception and returned by
+    * builder name, never swallowed. */
+  private[graft] def prebuild(spark: SparkSession, dir: String,
+                              entries: Seq[Artifacts.Artifact]): (Double, Seq[String]) = {
+    val t0 = System.nanoTime()
+    val failed = entries.distinctBy(_.builderName).flatMap { a =>
+      try {
+        a.builder match {
+          case Artifacts.Ensure(run) => run(spark, dir)
+          case Artifacts.Query(q) => SparkEntry.queries(q)(spark, dir).count()
+        }
+        None
+      } catch { case t: Throwable =>
+        println(s"[bench] PREBUILD FAILED: ${a.builderName}: $t")
+        Some(a.builderName)
+      } finally graft.core.Mat.releaseAll(blocking = true)
+    }
+    ((System.nanoTime() - t0) / 1e9, failed)
+  }
+
+  /** Freshness of each of `entries` for `dir`, re-derived from the
+    * warehouse (never assumed from a prebuild that reported success); the
+    * stale ones are printed by name, so a cold flag says which artifact
+    * the timed section would pay for. */
+  private def freshness(spark: SparkSession, dir: String, what: String,
+                        entries: Seq[Artifacts.Artifact]): Seq[(String, Boolean)] = {
+    val flags = entries.map(a => a.name -> a.isFresh(spark, dir))
+    val stale = flags.collect { case (n, false) => n }
+    if (stale.nonEmpty) println(s"[bench] $what: stale artifacts: ${stale.mkString(", ")}")
+    flags
+  }
+
   /** Prebuild + time the probe family on one corpus dir. The prebuild
-    * covers exactly the ensure-backed artifacts the TIMED set reads:
-    * `graft_semdedup_cells` (built by q62), `graft_vecbkt_corpus` (built
-    * by q154 — r11) and `graft_clusters` (built by
-    * the ensureClusterMap consumers — q105/q58; r8 post-mortem: the probe
-    * prebuilt q57, which computes clusters WITHOUT storing the map, so the
-    * timed section silently paid the q105/q58 cluster-map build at 10×
-    * and the honest warm flag read false — the "flag contradicts its own
-    * prebuild" finding). Prebuild failures are COLLECTED AND REPORTED,
-    * never swallowed, and the per-artifact warm flags are re-derived from
-    * the warehouse after the prebuild, exactly like the main bench. */
-  /** `reps`: the probe's timed section repeats and records per-query
+    * covers exactly the registry entries the TIMED set reads (r8
+    * post-mortem: a hand list missed the cluster map two timed queries
+    * read, so the timed section paid its build at 10× and the warm flag
+    * read false), and the per-artifact warm flags cover the same entries.
+    *
+    * `reps`: the probe's timed section repeats and records per-query
     * MEDIANS, exactly like the main bench — r11 post-mortem: the probe's
     * single-sample timings inherited whatever page-cache state the session
     * left behind (the driver's artifact of record showed q67 at 19.6× for
@@ -149,92 +183,9 @@ object Bench {
     * cold first pass, so back-to-back runs agree. */
   private def probeOneCorpus(spark: SparkSession, dir: String,
                              reps: Int): ProbeRun = {
-    val tPre = System.nanoTime()
-    val prebuildFailed = Seq("q62_semantic_dedup", "q105_dedup_inflation",
-        "q154_incremental_embedding",
-        // r13: q158 reads the stored int8 table; its build (one quantize
-        // pass) is ingest work and must not land in the timed ratios
-        "q158_int8_quant_recall",
-        // r13: q163 reads the seeded cell + PQ code tables too — build
-        // them on the probe corpus via q160 (same ensure path)
-        "q160_pq_adc_recall",
-        // r15: q164 reads the LABELED code table (graft_pq_lbl); q165's
-        // prebuild lands the tombstone-table creation + rule population
-        // (write-time state) outside the timed ratios
-        "q164_filtered_ann", "q165_tombstoned_ann",
-        // r16: the grow fold (admit + promote into the grown artifact
-        // family) is ingest work — prebuild it so the timed ratios
-        // measure the serve path
-        "q166_grown_ann", "q167_upsert_ann", "q169_grown_minhash",
-        // r17: the grown families of the new lifecycle gates (q170's
-        // tombstone state, q171's labeled grown codes, q172's grown term
-        // index) are ingest work too
-        "q170_grown_tombstoned", "q171_grown_filtered_ann",
-        "q172_grown_hybrid_rrf",
-        // r17 opt: the whole-corpus signature table the timed q24 probes
-        "q24_minhash_pairs",
-        // r18 opt: q58's k=32/8-band whole-corpus signature table (its
-        // LSH edges now come from the stored artifact) + the cluster map
-        "q58_dup_clusters_lsh")
-      .flatMap { n =>
-        val failed = try { SparkEntry.queries(n)(spark, dir).count(); None }
-                     catch { case t: Throwable =>
-                       println(s"[bench] PROBE PREBUILD FAILED: $n: $t"); Some(n) }
-        graft.core.Mat.releaseAll(blocking = true)
-        failed
-      }
-    val prebuildSec = (System.nanoTime() - tPre) / 1e9
-    val sfx = graft.core.Warehouse.corpusSuffix(dir)
-    val embStamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
-    val docStamp = graft.core.Warehouse.sourceStamp(s"$dir/documents.parquet")
-    val warmByArtifact = Seq(
-      "semdedup_cells" ->
-        graft.core.Warehouse.isFresh(spark, s"graft_semdedup_cells_$sfx", Seq(embStamp)),
-      "clusters" ->
-        graft.core.Warehouse.isFresh(spark, s"graft_clusters_$sfx", Seq(docStamp)),
-      // r17 opt: the q24/q66/q90 self band-join's stored signature table
-      "sig_all" ->
-        graft.core.Warehouse.isFresh(spark, s"graft_sig_all_$sfx", Seq(docStamp)),
-      // r18 opt: q58's k=32/8-band signature table
-      "sig_all32" ->
-        graft.core.Warehouse.isFresh(spark, s"graft_sig_all32_$sfx", Seq(docStamp)),
-      "vecbkt_corpus" ->
-        graft.core.Warehouse.isFresh(spark, s"graft_vecbkt_corpus_$sfx", Seq(embStamp)),
-      "int8" ->
-        graft.core.Warehouse.isFresh(spark, s"graft_int8_$sfx", Seq(embStamp)),
-      // the timed q163 reads the seeded cell + PQ code tables (built by the
-      // q160 prebuild) — the flags must cover what the timed set READS, or
-      // a prebuild regression shows warm while the timed section pays the
-      // build (the r8 "flag contradicts its own prebuild" class)
-      "ivf_seed" ->
-        graft.core.Warehouse.isFresh(spark, s"graft_ivf_seed_$sfx", Seq(embStamp)),
-      "pq_seed" ->
-        graft.core.Warehouse.isFresh(spark, s"graft_pq_seed_$sfx", Seq(embStamp)),
-      // the timed q164 reads the labeled code table (its own prebuild)
-      "pq_lbl" ->
-        graft.core.Warehouse.isFresh(spark, s"graft_pq_lbl_$sfx", Seq(embStamp))) ++
-      // r16: the grown artifact families q166/q167 read (their meta embeds
-      // the grow/removal fingerprints ALONGSIDE the corpus stamp, so the
-      // stamp fragment still detects staleness) — plus the shared frozen
-      // probe table the admit path ensures
-      (Seq("vecbkt_adm") ++
-        Seq("ivf_grown", "pq_grown", "int8_grown", "vecbkt_grown")
-          .flatMap(b => Seq(s"${b}_q166", s"${b}_q167",
-            // r17: the new lifecycle gates' grown families
-            s"${b}_q170", s"${b}_q171")) ++
-        Seq("pq_lbl_grown_q171"))
-        .map(b => b -> graft.core.Warehouse.isFresh(
-          spark, s"graft_${b}_$sfx", Seq(embStamp))) ++
-      Seq("sig_grown_q169" -> graft.core.Warehouse.isFresh(
-        spark, s"graft_sig_grown_q169_$sfx", Seq(docStamp)),
-        // r18 opt: q169's stored probe-panel signature table
-        "sig_panel_q169" -> graft.core.Warehouse.isFresh(
-          spark, s"graft_sig_panel_q169_$sfx", Seq(docStamp)),
-        // r17: q172's grown term index (both tables)
-        "terms_grown_q169" -> graft.core.Warehouse.isFresh(
-          spark, s"graft_terms_grown_q169_$sfx", Seq(docStamp)),
-        "terms_grown_q169_df" -> graft.core.Warehouse.isFresh(
-          spark, s"graft_terms_grown_q169_${sfx}_df", Seq(docStamp)))
+    val entries = Artifacts.all.filter(_.readers.exists(probeQueries.contains))
+    val (prebuildSec, prebuildFailed) = prebuild(spark, dir, entries)
+    val warmByArtifact = freshness(spark, dir, "probe corpus", entries)
     val ccRounds = scala.collection.mutable.Map[String, Int]()
     val candPairs = scala.collection.mutable.Map[String, Long]()
     val runs = (1 to math.max(1, reps)).map { _ =>
@@ -376,113 +327,23 @@ object Bench {
     // extra cached-block count that populates it; every other entry point
     // keeps containmentPairs action-free
     graft.operators.Pipeline.benchRegistersEnabled = true
-    // q52/q62/q74/q82 ensure their ingest artifact instead of rebuilding
-    // per call, so their timings are bimodal on warehouse state: record
-    // which mode THIS run measured, or round-over-round comparisons
-    // conflate code changes with artifact-cache hits
-    // warm means: EVERY ensure-backed artifact for THIS corpus exists
-    // with a fingerprint matching the current source data — exactly
-    // what ensure* will decide. A partial warehouse (one artifact of
-    // four) or a regenerated-in-place corpus (stale sourceStamp)
-    // reads as cold, because that run WOULD pay those builds.
-    def warmCheck(dir: String): Boolean = {
-      val sfx = graft.core.Warehouse.corpusSuffix(dir)
-      val embStamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
-      val docStamp = graft.core.Warehouse.sourceStamp(s"$dir/documents.parquet")
-      graft.core.Warehouse.isFresh(spark, s"graft_ivf_cells_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_semdedup_cells_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_sig_corpus_$sfx", Seq(docStamp)) &&
-      // r17 opt: the whole-corpus signature table q24/q66/q90's self
-      // band-join probes (candidates were re-minhashed live before)
-      graft.core.Warehouse.isFresh(spark, s"graft_sig_all_$sfx", Seq(docStamp)) &&
-      // r18 opt: q58's k=32/8-band signature table
-      graft.core.Warehouse.isFresh(spark, s"graft_sig_all32_$sfx", Seq(docStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_clusters_$sfx", Seq(docStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_ivf_inc_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_ivf_seed_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_vecbkt_corpus_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_pq_seed_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_pq_train_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_int8_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_pq_lbl_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_vecbkt_adm_$sfx", Seq(embStamp)) &&
-      (Seq("ivf_grown", "pq_grown", "int8_grown", "vecbkt_grown")
-        .flatMap(b => Seq(s"${b}_q166", s"${b}_q167",
-          s"${b}_q170", s"${b}_q171"))
-        .forall(b => graft.core.Warehouse.isFresh(
-          spark, s"graft_${b}_$sfx", Seq(embStamp)))) &&
-      graft.core.Warehouse.isFresh(
-        spark, s"graft_pq_lbl_grown_q171_$sfx", Seq(embStamp)) &&
-      graft.core.Warehouse.isFresh(
-        spark, s"graft_terms_grown_q169_$sfx", Seq(docStamp)) &&
-      graft.core.Warehouse.isFresh(
-        spark, s"graft_terms_grown_q169_${sfx}_df", Seq(docStamp)) &&
-      graft.core.Warehouse.isFresh(
-        spark, s"graft_sig_grown_q169_$sfx", Seq(docStamp)) &&
-      // r18 opt: q169's stored probe-panel signature table
-      graft.core.Warehouse.isFresh(
-        spark, s"graft_sig_panel_q169_$sfx", Seq(docStamp)) &&
-      // r17: the stored term index (both tables — a torn build leaves the
-      // postings fingerprinted but the df side missing, and ensure* would
-      // rebuild, so the flag must read cold)
-      graft.core.Warehouse.isFresh(spark, s"graft_terms_$sfx", Seq(docStamp)) &&
-      graft.core.Warehouse.isFresh(spark, s"graft_terms_${sfx}_df", Seq(docStamp))
-    }
-    val warmFound = warmCheck(sfDir)
+    // warm means: EVERY registry artifact for THIS corpus exists with a
+    // fingerprint matching the current source data — exactly what its
+    // ensure* will decide. A partial warehouse or a regenerated-in-place
+    // corpus (stale sourceStamp) reads as cold, because that run WOULD pay
+    // those builds; the flag records which mode this run measured.
+    def warm(what: String) =
+      freshness(spark, sfDir, what, Artifacts.all).forall(_._2)
+    val warmFound = warm("warehouse at start")
     // session warmup: JIT/codegen/scheduler paths + parquet reader init
     // (region is 5 rows — engine machinery, not query data)
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    // pre-build every ensure-backed artifact OUTSIDE the timed section:
-    // artifacts are write-once INGEST work at 100 TB, so the bench of
-    // record measures the query path against a warm warehouse
-    // (r5/r6 comparisons conflated code changes with artifact-cache
-    // state). The cold cost is still recorded — once, as prebuild_sec.
-    val tPre = System.nanoTime()
-    val prebuildFailed = Seq("q52_ivf_topk", "q62_semantic_dedup",
-        "q74_incremental_stored", "q77_cluster_best",
-        "q112_ivf_incremental", "q152_ivf_partial_probe",
-        "q154_incremental_embedding",
-        // r12: the stored PQ code tables (q160/q161 read graft_pq_seed;
-        // q162 additionally reads graft_pq_train — its cold build runs
-        // the Lloyd training, which must not land in the timed section)
-        "q160_pq_adc_recall", "q162_pq_trained_audit",
-        // r13: the stored int8 quantization table (graft_int8)
-        "q158_int8_quant_recall",
-        // r15: the labeled code table (graft_pq_lbl) q164 probes; q165's
-        // tombstone-table creation + rule population (write-time state)
-        "q164_filtered_ann", "q165_tombstoned_ann",
-        // r16: the grow fold (admit + promote) is ingest work — including
-        // the doc arm's (q169: warmCheck requires graft_sig_grown_q169, so
-        // the prebuild must cover it or a cold warehouse pays the fold in
-        // the timed first rep and warmAfter reads false — r16 ADVICE)
-        "q166_grown_ann", "q167_upsert_ann", "q169_grown_minhash",
-        // r17: the stored term index (graft_terms + _df) q130/q168 probe
-        "q130_term_retrieval",
-        // r17 opt round: warmCheck requires the q170/q171/q172 grown
-        // families (tombstone state, labeled grown codes, grown term
-        // index) — without prebuilding them a cold warehouse pays those
-        // grow folds in the timed first rep and warmAfter reads false
-        // after a fully successful prebuild (the r16-ADVICE q169 class;
-        // the scale probe's prebuild already covers all three)
-        "q170_grown_tombstoned", "q171_grown_filtered_ann",
-        "q172_grown_hybrid_rrf",
-        // r17 opt: the whole-corpus signature table (graft_sig_all) the
-        // q24/q66/q90 self band-join now probes
-        "q24_minhash_pairs",
-        // r18 opt: q58's k=32/8-band whole-corpus signature table
-        // (graft_sig_all32) — its LSH edges now probe the stored artifact
-        "q58_dup_clusters_lsh").flatMap { n =>
-      val failed = try { SparkEntry.queries(n)(spark, sfDir).count(); None }
-                   catch { case _: Throwable => Some(n) }
-      graft.core.Mat.releaseAll(blocking = true)
-      failed
-    }
-    val prebuildSec = (System.nanoTime() - tPre) / 1e9
+    val (prebuildSec, prebuildFailed) = prebuild(spark, sfDir, Artifacts.all)
     // the artifact of record must not CLAIM warmth it didn't achieve: a
     // prebuild failure means the timed section pays (or fails) the build,
     // so the flag is re-derived from the warehouse, not hardcoded
-    val warmAfter = prebuildFailed.isEmpty && warmCheck(sfDir)
+    val warmAfter = warm("after prebuild") && prebuildFailed.isEmpty
     if (prebuildFailed.nonEmpty)
       println(s"[bench] PREBUILD FAILED (timed section runs cold): " +
         prebuildFailed.sorted.mkString(", "))

@@ -104,10 +104,10 @@ final class AlertService(
 
   private def appendAuditLog(alert: SqlAlert, status: String, details: String,
                              now: LocalDateTime): Unit = {
-    import spark.implicits._
     store.append(spark.createDataset(Seq(SqlAlertLog(
       System.nanoTime(), alert.id, alert.name, status,
       Condition.describe(alert.conditionType, alert.threshold),
-      java.sql.Timestamp.valueOf(now), Some(details)))), "sql_alert_logs")
+      java.sql.Timestamp.valueOf(now), Some(details))))(CatalogStore.encoder[SqlAlertLog]),
+      "sql_alert_logs")
   }
 }

@@ -64,8 +64,8 @@ final class TaskNotifier(
         errorMessage = sent.left.toOption,
         sentTime = java.sql.Timestamp.valueOf(now))
     }
-    import spark.implicits._
-    store.append(spark.createDataset(rows), "notification_logs")
+    store.append(spark.createDataset(rows)(CatalogStore.encoder[NotificationLog]),
+      "notification_logs")
     rows
   }
 }

@@ -596,7 +596,7 @@ object CatalogStore {
     * API's concurrent requests each read several tables. An encoder is
     * immutable, so one per type serves every store and thread. */
   private val encoders = new java.util.concurrent.ConcurrentHashMap[Type, Encoder[_]]()
-  private def encoder[T <: Product: TypeTag]: Encoder[T] =
+  private[graft] def encoder[T <: Product: TypeTag]: Encoder[T] =
     encoders.computeIfAbsent(typeTag[T].tpe, _ => Encoders.product[T]).asInstanceOf[Encoder[T]]
 
   /** Live part files of a table: name → (size, mtime). */

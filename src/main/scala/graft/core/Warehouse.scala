@@ -232,7 +232,14 @@ object Warehouse {
     * and misses the cache. Never holds DataFrames or query results; only
     * driver-small scalars the serving paths would otherwise re-derive
     * with a Spark job per call. Clear-on-threshold bounded (the codebook
-    * memo's shape). */
+    * memo's shape).
+    *
+    * Not linearizable on the hit path: a hit returns the value memoized for
+    * the stamps this call listed, so a write from another session or JVM
+    * landing after that listing is not seen by this one call. The next
+    * call lists the new stamp, misses, and recomputes; the window is one
+    * call wide. A miss re-stamps after computing and memoizes nothing if a
+    * stamp moved meanwhile. */
   def cachedByStamp[A](spark: SparkSession, kind: String,
                        tables: Seq[String])(compute: => A): A = {
     def keyNow() = kind + "|" + tables.map(t =>

@@ -703,7 +703,7 @@ object Pipeline {
     * table co-locates with) and the seeded PQ code table, returning
     * (codes table name, stored codebook). Both ensures are warm no-ops
     * after the first build of a corpus. */
-  private def ensureSeededPq(spark: SparkSession, dir: String,
+  private[operators] def ensureSeededPq(spark: SparkSession, dir: String,
                              m: Int, k: Int, dsub: Int): (String, Array[Int]) = {
     // lazy: the ensures take df by-name, so a warm re-attach never pays
     // the corpus DataFrame construction (file listing + schema job)
@@ -742,68 +742,24 @@ object Pipeline {
     (trainTable, cb)
   }
 
-  /** ONE-CALL corpus index build — every canonical write-time artifact
-    * the query paths re-attach to, each via its idempotent `ensure*`
-    * (warm re-attach when the stored fingerprint matches, rebuild when
-    * the corpus or any config changed). This is the engine's INGEST step
-    * as a single entry point, scheduled in production as
-    * task_type='index' ([[graft.sched.IndexTask]]) — the root of the
+  /** ONE-CALL corpus index build — the [[Artifacts.Ensure]] entries of
+    * [[Artifacts]], in declaration order, each via its idempotent
+    * `ensure*` (warm re-attach when the stored fingerprint matches,
+    * rebuild when the corpus or any config changed). This is the
+    * engine's INGEST step as a single entry point, scheduled in production
+    * as task_type='index' ([[graft.sched.IndexTask]]) — the root of the
     * task DAG: admission tasks depend on it (they probe these artifacts),
     * compaction tasks maintain the sinks its consumers append.
     *
     * Returns (table, rebuilt) per artifact — `rebuilt=false` means the
     * stored artifact was fresh and the call re-attached with zero Spark
     * jobs, so a cadence-scheduled index task is a cheap no-op between
-    * corpus refreshes.
-    *
-    * Two variant tables stay QUERY-OWNED by design: q62's semantic-dedup
-    * cells (its nlist derives from the query's planted-corpus size) and
-    * q154's corpus-only incremental cells (an index-maintenance DEMO —
-    * building it here would defeat that query's add-without-retrain
-    * point). The bench prebuild builds them by running those queries. */
+    * corpus refreshes. The registry's query-owned artifacts are built by
+    * the queries that own them. */
   def ensureCorpusIndex(spark: SparkSession, dir: String): Seq[(String, Boolean)] = {
-    val docStamp = graft.core.Warehouse.sourceStamp(s"$dir/documents.parquet")
-    val embStamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
-    // lazy + by-name ensures: a fully-warm tick constructs NO DataFrames
-    // at all (even spark.read.parquet costs a file listing + schema job —
-    // at 100 TB, an object-store metadata scan per tick for nothing)
-    lazy val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    lazy val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    lazy val emb2 = Tables.embeddings(spark, dir) // + label, for the q164 index
-    def name(p: String) = cellTableName(p, dir)
-    // build order matters only for the PQ pair: codes co-locate with (and
-    // fingerprint against) the seeded coarse cells, so cells land first
-    val builds: Seq[(String, () => Unit)] = Seq(
-      // MinHash signature table (q74/q82's banded-probe corpus artifact)
-      (name("graft_sig_corpus"), () =>
-        Dedup.ensureSignatureTable(
-          docs.filter(pmod(col("doc_id"), lit(5)) =!= 4), "doc_id", "text",
-          name("graft_sig_corpus"), k = 48, bands = 12, tag = docStamp)),
-      // duplicate-cluster map (q57's propagation, read by q77/q79/q105)
-      (name("graft_clusters"), () => { ensureClusterMap(spark, dir); () }),
-      // IVF coarse cells (q52/q152's ANN layout)
-      (name("graft_ivf_cells"), () =>
-        Ivf.ensureCellTable(emb, "vec_id", "embedding", dim = 64, nlist = 16,
-          name("graft_ivf_cells"), tag = embStamp)),
-      // seeded coarse cells + seeded PQ codes (q160/q161/q162's index)
-      (name("graft_ivf_seed"), () => { ensureSeededPq(spark, dir, 8, 16, 8); () }),
-      (name("graft_pq_seed"), () => { ensureSeededPq(spark, dir, 8, 16, 8); () }),
-      // labeled PQ codes (q164's filtered-ANN index — label attr on rows)
-      (name("graft_pq_lbl"), () => {
-        Vectors.ensurePqCodes(emb2, "vec_id", "embedding",
-          name("graft_ivf_seed"), name("graft_pq_lbl"), 8, 16, 8,
-          tag = embStamp, attrs = Seq("label")); () }),
-      // trained PQ codes (q162's Lloyd codebook)
-      (name("graft_pq_train"), () => { ensureTrainedPq(spark, dir); () }),
-      // int8 quantized corpus + cached norms (q158's integer index)
-      (name("graft_int8"), () =>
-        Vectors.ensureInt8Table(emb, "vec_id", "embedding", name("graft_int8"),
-          tag = embStamp)),
-      // LSH bucket table over the standing corpus (q41/q159's probe side)
-      (name("graft_vecbkt_corpus"), () =>
-        Vectors.ensureBucketTable(emb.filter(pmod(col("vec_id"), lit(5)) =!= 4),
-          "vec_id", "embedding", dim = 64, table = name("graft_vecbkt_corpus"),
-          tag = embStamp)))
+    val builds = Artifacts.all.collect {
+      case a @ Artifacts.Artifact(_, _, _, Artifacts.Ensure(run), _) => (a.table(dir), run)
+    }
     // snapshot each artifact's FULL stored fingerprint BEFORE any build
     // (one entry's ensure can build a sibling too — ensureSeededPq covers
     // cells AND codes); "rebuilt" = the fingerprint changed during the
@@ -815,7 +771,7 @@ object Pipeline {
       t -> graft.core.Warehouse.fingerprintOf(spark, t)
     }.toMap
     builds.map { case (t, build) =>
-      build()
+      build(spark, dir)
       (t, graft.core.Warehouse.fingerprintOf(spark, t) != before(t))
     }
   }
@@ -1135,7 +1091,7 @@ object Pipeline {
     else Seq.empty
   }
 
-  private def resetGateNamespaceIfStale(spark: SparkSession, dir: String,
+  private[operators] def resetGateNamespaceIfStale(spark: SparkSession, dir: String,
                                         ns: String): Unit = {
     require(ns.nonEmpty, "gate-namespace guard is for gate namespaces only")
     val stamp = gateCorpusStamp(dir)
@@ -1169,35 +1125,39 @@ object Pipeline {
     * belt-and-braces guard against out-of-band sweeps of the state tables
     * (the marker says "admitted" but the rows are gone), the skip also
     * requires each `guards` group to name at least one table that still
-    * has data files (driver-side listing) — otherwise the step re-runs,
-    * which is always safe because it is idempotent. */
-  private def gateStepOnce(spark: SparkSession, dir: String, ns: String,
+    * has rows — otherwise the step re-runs, which is always safe because
+    * it is idempotent.
+    *
+    * A step whose rule set legitimately selects ZERO rows for a group
+    * leaves that group row-less, so its row guard could never be
+    * satisfied and the step would replay on every serve. The marker line
+    * therefore records, per step, the indexes of the groups the step left
+    * empty (`step=<name>:empty=1,2`); the skip waives the row guard for
+    * those groups only, and keeps it on for every group that landed rows
+    * (GateStepSpec pins a two-group step with one empty group). */
+  private[operators] def gateStepOnce(spark: SparkSession, dir: String, ns: String,
                            step: String, guards: Seq[Seq[String]] = Seq.empty)
                           (body: => Unit): Unit = {
+    def hasRows(g: Int) = guards(g).exists(graft.core.Warehouse.growableHasRows(spark, _))
+    // the empty groups of this step's LAST marker line, if it has one
+    def recordedEmpty(lines: Seq[String]): Option[Set[Int]] = lines.collect {
+      case l if l == "step=" + step => Set.empty[Int]
+      case l if l.startsWith(s"step=$step:empty=") =>
+        l.stripPrefix(s"step=$step:empty=").split(",").map(_.toInt).toSet
+    }.lastOption
     val lines = readGateMarker(spark, dir, ns)
-    // r17 ADVICE: a step whose rule set legitimately selects ZERO rows
-    // leaves its guard tables row-less, so the row guard could never be
-    // satisfied and the (idempotent) step replayed on every serve — a
-    // quiet reversion to pre-r17 cost on edge corpora. The explicit
-    // ":empty" marker line records "step ran, selected nothing" and
-    // satisfies the skip without the row guard (there is no state for an
-    // out-of-band sweep to remove, so the belt-and-braces guard protects
-    // nothing there).
     val done = lines.headOption.contains(gateCorpusStamp(dir)) &&
-      (lines.contains("step=" + step + ":empty") ||
-        (lines.contains("step=" + step) &&
-         guards.forall(_.exists(graft.core.Warehouse.growableHasRows(spark, _)))))
+      recordedEmpty(lines).exists(e => guards.indices.forall(g => e(g) || hasRows(g)))
     if (!done) {
       body
       val marker = gateMarkerPath(spark, dir, ns)
       val cur = readGateMarker(spark, dir, ns)
-      val landedRows =
-        guards.forall(_.exists(graft.core.Warehouse.growableHasRows(spark, _)))
-      val line = "step=" + step + (if (landedRows) "" else ":empty")
+      val empty = guards.indices.filterNot(hasRows)
       if (cur.headOption.contains(gateCorpusStamp(dir)) &&
-          !cur.contains(line))
+          !recordedEmpty(cur).contains(empty.toSet))
         java.nio.file.Files.write(marker,
-          (line + "\n").getBytes("UTF-8"),
+          ("step=" + step + (if (empty.isEmpty) "" else empty.mkString(":empty=", ",", "")) +
+            "\n").getBytes("UTF-8"),
           java.nio.file.StandardOpenOption.APPEND)
     }
   }

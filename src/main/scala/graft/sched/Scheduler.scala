@@ -66,10 +66,10 @@ final class Scheduler(
                org.apache.spark.sql.functions.col("id").desc)
     val logs = {
       import org.apache.spark.sql.functions.{col, row_number}
-      import spark.implicits._
       store.read[TaskLog]("task_logs")
         .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= keep).drop("rn").as[TaskLog].collect()
+        .filter(col("rn") <= keep).drop("rn")
+        .as[TaskLog](CatalogStore.encoder[TaskLog]).collect()
     }
     val logsByTask = logs.groupBy(_.taskId).map { case (k, v) =>
       k -> v.sortBy(_.executionTime.getTime).reverse.toSeq
@@ -139,8 +139,7 @@ final class Scheduler(
     // from a sequence table or use (driverId, seq) composite keys.
     val row = TaskLog(System.nanoTime() + logSeq, taskId, status, message,
       java.sql.Timestamp.valueOf(now))
-    import spark.implicits._
-    store.append(spark.createDataset(Seq(row)), "task_logs")
+    store.append(spark.createDataset(Seq(row))(CatalogStore.encoder[TaskLog]), "task_logs")
   }
 
   /** ST1 — the 1 s poll loop (web_scheduler.py:1556). Runs until `stop`

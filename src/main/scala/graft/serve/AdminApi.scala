@@ -555,9 +555,8 @@ final class AdminApi(
             // full collect of the unbounded log table
             val maxLogId = store.read[TaskLog]("task_logs").agg(max("id"))
               .head().get(0) match { case null => 0L; case v => v.asInstanceOf[Long] }
-            import spark.implicits._
-            store.append(Seq(TaskLog(maxLogId + 1, t.id, status,
-              message, ts(now))).toDS(), "task_logs")
+            store.append(spark.createDataset(Seq(TaskLog(maxLogId + 1, t.id, status,
+              message, ts(now))))(CatalogStore.encoder[TaskLog]), "task_logs")
             // the reference notifies on manual SQL runs too (web_scheduler.py:5050-5055)
             if (t.taskType == "sql") taskNotifier.foreach(_.notify(t.id, status, message))
             // stamp lastRun on the CURRENT row (updateRows re-reads under

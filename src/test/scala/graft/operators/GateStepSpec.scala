@@ -9,6 +9,8 @@ import graft.SparkSuite
   *  - sweeping the namespace state out from under a standing marker does
   *    NOT break the serve — the guards detect row-less state and re-run
   *    the (idempotent) step;
+  *  - a step that leaves one of its guard groups empty keeps the row
+  *    guard on for the groups that did land rows;
   *  - the self band-join from the stored signature table emits exactly
   *    minhashCandidates' pair set. */
 class GateStepSpec extends SparkSuite {
@@ -42,6 +44,37 @@ class GateStepSpec extends SparkSuite {
 
     graft.core.Warehouse.sweepCorpus(spark, dir)
     graft.core.Mat.releaseAll(blocking = true)
+  }
+
+  test("a step that fills one of two guard groups keeps the row guard on for that group") {
+    val dir = tmpDir("gatestep-groups")
+    graft.Bench.synthProbeCorpus(spark, dir, nDocs = 20, nVecs = 20)
+    val sfx = graft.core.Warehouse.corpusSuffix(dir)
+    val (filled, left) = (s"graft_gs_filled_$sfx", s"graft_gs_left_$sfx")
+    Seq(filled, left).foreach(graft.core.Warehouse.ensureGrowableTable(spark, _,
+      "gatestep v1", new org.apache.spark.sql.types.StructType().add("id", "long"), null, 0))
+    Pipeline.resetGateNamespaceIfStale(spark, dir, "gs")
+    var runs = 0
+    // the step lands rows in the first group only; the second stays empty
+    def serve(): Unit = Pipeline.gateStepOnce(spark, dir, "gs", "fill-one",
+        guards = Seq(Seq(filled), Seq(left))) {
+      runs += 1
+      if (!graft.core.Warehouse.growableHasRows(spark, filled))
+        spark.range(3).write.mode("append").format("parquet").saveAsTable(filled)
+    }
+    serve()
+    assert(runs == 1)
+    serve()
+    assert(runs == 1, "a replay with the filled group intact must skip the step")
+    // out-of-band sweep of the group that did land rows: its row guard
+    // must still be on, so the step runs again and restores the rows
+    graft.core.Warehouse.truncateGrowable(spark, filled)
+    serve()
+    assert(runs == 2, "the swept group's row guard was off: the step did not run again")
+    assert(graft.core.Warehouse.growableHasRows(spark, filled))
+    serve()
+    assert(runs == 2)
+    graft.core.Warehouse.sweepCorpus(spark, dir)
   }
 
   test("stored-signature self candidates equal the live minhashCandidates pair set") {
