@@ -1,6 +1,8 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.operators.Artifacts
 object Bench {
 
@@ -282,11 +284,15 @@ object Bench {
   }
 
   /** Time each query; rows = -1 marks a FAILED query (never silently
-    * folded into a timing — BenchVerifyLoudSpec pins this contract). */
+    * folded into a timing — BenchVerifyLoudSpec pins this contract). The
+    * fourth field counts the classes Janino compiled while the query ran:
+    * the counter is JVM-wide, and queries run one at a time, so the delta
+    * is the query's. */
   private[graft] def timeQueries(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-      : Seq[(String, Double, Long)] =
+      : Seq[(String, Double, Long, Long)] =
     queries.map { case (name, fn) =>
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val rows = try fn(spark, sfDir).count() catch { case t: Throwable =>
         // say WHY, like Verify does — a swallowed message leaves a failed
@@ -296,6 +302,7 @@ object Bench {
         -1L
       }
       val sec = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       if (rows >= 0) {
         ccRoundsFor(name).foreach { case (n, r) => mainCcRounds(n) = r }
         candPairsFor(name).foreach { case (n, c) => mainCandPairs(n) = c }
@@ -305,7 +312,7 @@ object Bench {
       // tick end. Untimed lifecycle bookkeeping; blocking so no unpersist
       // future can linger past its queue entry into session shutdown.
       graft.core.Mat.releaseAll(blocking = true)
-      (name, sec, rows)
+      (name, sec, rows, compiles)
     }
 
   /** cc-round observations of the MAIN timed set (last rep wins — the
@@ -380,6 +387,11 @@ object Bench {
       .mkString("{", ",", "}")
     val rowsJson = results.map { case (k, _, _, r) => s"\"" + k + "\":" + r }
       .mkString("{", ",", "}")
+    // per query, one count per rep: a rep that compiles again what the
+    // rep before it compiled shows the codegen cache evicting
+    val compilesJson = runs.head.indices.map { i =>
+      s"\"" + runs.head(i)._1 + "\":" + runs.map(_(i)._4).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // `value` sums OK queries only: folding a failed query's (often tiny)
     // error time into the total would read a regression-to-failure as a
@@ -408,8 +420,13 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val cpJson = mainCandPairs.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // class metadata of every generated class this run kept: the cost side
+    // of the codegen cache size (GraftSession.CodegenCacheEntries)
+    val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").map(_.getUsage.getUsed / 1048576.0)
+      .getOrElse(-1.0)
     val detailJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"queries_min":$qsMin,"rows":$rowsJson,"failed":$failedJson,"cc_rounds":$ccJson,"cand_pairs":$cpJson,"sf":"${esc(sfDir)}","warehouse_warm":$warmAfter,"warehouse_warm_found":$warmFound,"prebuild_failed":${prebuildFailed.map("\"" + _ + "\"").mkString("[", ",", "]")},"prebuild_sec":$prebuildSec$probeJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"queries_min":$qsMin,"rows":$rowsJson,"codegen_compiles":$compilesJson,"failed":$failedJson,"cc_rounds":$ccJson,"cand_pairs":$cpJson,"sf":"${esc(sfDir)}","warehouse_warm":$warmAfter,"warehouse_warm_found":$warmFound,"prebuild_failed":${prebuildFailed.map("\"" + _ + "\"").mkString("[", ",", "]")},"prebuild_sec":$prebuildSec,"metaspace_mb":$metaspaceMb$probeJson}"""
     // r3 post-mortem: the metric line printed BEFORE spark.stop() was
     // displaced out of the driver's 2000-char stdout tail by a shutdown
     // stack-trace flood. r4 post-mortem: with 73 queries the single metric

@@ -2,6 +2,7 @@ package graft.alerts
 
 import java.time.LocalDateTime
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
@@ -78,9 +79,13 @@ final class AlertService(
       val status =
         if (!res.triggered) "no_trigger"
         else {
+          // the first 10,000 rows come to the driver and are exported from
+          // there: a `limit` in the export plan would name its counter from
+          // a JVM-wide sequence and so compile new classes on every check
           val artifact =
-            try Some(Ingest.exportResult(df.limit(10000), exportDir,
-              s"${alert.name}_${now.toLocalDate}.csv"))
+            try Some(Ingest.exportResult(
+              spark.createDataFrame(df.take(10000).toSeq.asJava, df.schema),
+              exportDir, s"${alert.name}_${now.toLocalDate}.csv"))
             catch { case NonFatal(_) => None }
           val sent = notifier.send(
             Notifier.splitRecipients(alert.recipients),

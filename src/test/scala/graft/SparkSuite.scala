@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +20,10 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
+    // the engine's codegen cache size, so specs run the engine's cache; it
+    // is JVM-wide and fixed by the first session, which is this one
+    .config("spark.sql.codegen.cache.maxEntries",
+      graft.core.GraftSession.CodegenCacheEntries.toString)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     // session constant (see GraftSession): suites share one session and
@@ -36,6 +41,14 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Janino compilations while `body` runs. The counter is JVM-wide, so a
+    * concurrent suite's compilations count too. */
+  def compiledDuring(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
 
   /** Spark jobs started while `body` runs. Listener events arrive
     * asynchronously but in order, so two marked sentinel jobs bracket the

@@ -98,4 +98,23 @@ class AlertServiceSpec extends SparkSuite {
     assert(!a.isEnabled && a.threshold == 99, "the edit was reverted")
     assert(a.lastCheck.map(_.toLocalDateTime).contains(t0))
   }
+
+  test("a repeated triggering check compiles no new code and exports the first 10,000 rows") {
+    val (_, notifier, svc) = fixture("rows_gt", 10)
+    assert(svc.check(5L).exists(_.triggered)) // compiles the check's code
+    // the counter is JVM-wide: a repeat that compiles nothing in any of
+    // three tries rules out a compile per check, which every try shows
+    val compiled = (1 to 3).map(_ => compiledDuring(assert(svc.check(5L).exists(_.triggered))))
+    assert(compiled.contains(0L), s"each repeated check compiled code: $compiled")
+
+    // the artifact holds what an export of the query's first 10,000 rows writes
+    def lines(path: String) =
+      scala.util.Using.resource(scala.io.Source.fromFile(path))(_.getLines().toVector)
+    val exported = lines(notifier.sent.last.attachments.head)
+    val expected = lines(graft.sources.Ingest.exportResult(
+      spark.table("orders_alert_view").limit(10000), tmpDir("alert_expected"), "expected.csv"))
+    assert(exported.head == expected.head && exported.head.startsWith("o_orderkey,"))
+    assert(exported.tail.sorted == expected.tail.sorted && exported.size > 1)
+    assert(notifier.sent.last.attachments.head.contains("orders-watch_2026-02-01.csv"))
+  }
 }

@@ -255,12 +255,6 @@ class HttpApiSpec extends SparkSuite {
   }
 
   test("a repeated request compiles no new code, however much later it comes") {
-    import org.apache.spark.metrics.source.CodegenMetrics
-    def compiledDuring(body: => Unit): Long = {
-      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      body
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    }
     for (token <- Seq("good-token", "expired-token")) {
       val status = get("/api/task-logs/1", Some(token))._1 // compiles the route's code
       // the counter is JVM-wide: a repeat that compiles nothing in any of
