@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's recommended configuration, sized by
@@ -11,6 +12,13 @@ import org.apache.spark.sql.SparkSession
   * the JVM's first code generation. So a `GraftSession` has to build the
   * JVM's first session; a session built earlier elsewhere fixes the cache
   * at its own size for the life of the JVM.
+  *
+  * The `file://` file system is JVM-wide too: Hadoop caches one instance
+  * per scheme and user, whatever conf asked for it. The session sets
+  * [[LocalFs]] through [[LocalFsConfs]], and [[local]] and [[cluster]]
+  * check after `getOrCreate` that the cached instance is that class, so a
+  * `file://` file system created earlier in the JVM fails the session
+  * instead of silently forking a `chmod` for every file it writes.
   */
 object GraftSession {
 
@@ -27,16 +35,36 @@ object GraftSession {
     * 206 MB at 100 entries and 219 MB at 4,096. */
   val CodegenCacheEntries = 4096
 
+  /** The Hadoop confs, as Spark `spark.hadoop.*` keys, that make `file://`
+    * paths use [[LocalFs]]: the `FileSystem` class and the
+    * `AbstractFileSystem` class that `FileContext` loads. */
+  val LocalFsConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Fc].getName)
+
   /** Local development/test shape (what Verify/Bench use). */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    configure(SparkSession.builder().master(s"local[$cores]"), shufflePartitions = cores)
-      .getOrCreate()
+    requireLocalFs(configure(SparkSession.builder().master(s"local[$cores]"),
+      shufflePartitions = cores).getOrCreate())
 
   /** Cluster shape: shuffle partitions sized ~2-3× total executor cores
     * (callers pass the real number); AQE then coalesces small partitions at
     * runtime, so over-provisioning is safe and under-provisioning is not. */
-  def cluster(builder: SparkSession.Builder, totalCores: Int): SparkSession.Builder =
-    configure(builder, shufflePartitions = totalCores * 3)
+  def cluster(builder: SparkSession.Builder, totalCores: Int): SparkSession =
+    requireLocalFs(configure(builder, shufflePartitions = totalCores * 3).getOrCreate())
+
+  /** `spark`, once the JVM's cached `file://` file system is known to be
+    * [[LocalFs]]; otherwise an `IllegalStateException` naming the class
+    * that was cached first. */
+  def requireLocalFs(spark: SparkSession): SparkSession = {
+    val raw = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).getRaw
+    if (!raw.isInstanceOf[LocalFs.Raw])
+      throw new IllegalStateException(
+        s"the JVM's file:// file system is ${raw.getClass.getName}, not " +
+        s"${classOf[LocalFs.Raw].getName}: a file:// FileSystem was created " +
+        "before this session, and Hadoop's cache keeps the first one")
+    spark
+  }
 
   /** Scheduler-pool names: FAIR scheduling between pools keeps an API
     * query responsive while a long task job runs (the reference serves 4
@@ -52,6 +80,7 @@ object GraftSession {
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
 
   private def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = b
+    .config(LocalFsConfs)
     .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     // FAIR across pools: serving threads (ServePool) and the scheduler

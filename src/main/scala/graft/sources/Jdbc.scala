@@ -1,18 +1,22 @@
 package graft.sources
 
-import java.sql.DriverManager
+import java.sql.{Connection, DriverManager, PreparedStatement, Types}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
+import org.apache.spark.sql.types._
 
 import graft.catalog.Model.DbConfig
 import graft.sqlx.Sql
 
 /** Real JDBC source/sink layer — the reference's external-database execution
   * fabric (web_scheduler.py:896-1026 per-dialect connect/execute;
-  * excel_to_db/excel_to_db.py:41-70 engine factory, :95 `to_sql`) expressed
-  * through Spark's `format("jdbc")` reader/writer so scans and loads
-  * distribute across executors.
+  * excel_to_db/excel_to_db.py:41-70 engine factory, :95 `to_sql`). Scans
+  * and table loads go through Spark's `format("jdbc")` reader/writer and
+  * distribute across executors; the API's record inserts and a script's
+  * DML are metadata-sized and run on one driver-side connection.
   *
   * Dialect coverage mirrors the reference's `db_type` column (mysql /
   * postgresql / sqlite) plus `derby`, the embedded database available in
@@ -113,8 +117,15 @@ object Jdbc {
   }
 
   /** S4 — record-batch append (first-record column contract,
-    * web_scheduler.py:4410; missing-key error 4485-4487), landing in the
-    * external database via the JDBC writer. */
+    * web_scheduler.py:4410; missing-key error 4485-4487), as one
+    * transaction on one driver-side connection, like the reference's
+    * `executemany` and single commit (:4376-4487). A request carries a
+    * handful of records, so a Spark write job would cost more than the
+    * insert, and its partitions would each commit on their own: a record
+    * the database rejects would leave the other partitions' rows behind.
+    * Here the column types come from the table itself
+    * (`dialect.getSchemaQuery`), the records go in as one
+    * `PreparedStatement` batch, and any error rolls the batch back. */
   def insertRecords(spark: SparkSession, t: Target, table: String,
                     records: Seq[Map[String, Any]]): Either[String, Long] = {
     if (records.isEmpty) return Left("no records provided")
@@ -124,85 +135,123 @@ object Jdbc {
         s"record $i missing column(s): ${cols.filterNot(r.contains).mkString(",")}"
     }
     missing.toLeft(()).flatMap { _ =>
-      val schema = read(spark, t, table).schema
-      // remote engines report folded (e.g. uppercase) names — match
-      // case-insensitively but write with the caller's spelling
-      val byLower = schema.fields.map(f => f.name.toLowerCase -> f).toMap
-      // a record column the table doesn't have is a clean client error,
-      // not a bare NoSuchElementException-turned-500
-      val unknown = cols.filterNot(c => byLower.contains(c.toLowerCase))
-      if (unknown.nonEmpty)
-        return Left(s"unknown column(s) for table '$table': " +
-          unknown.mkString(","))
-      val ordered = org.apache.spark.sql.types.StructType(
-        cols.map(c => byLower(c.toLowerCase).copy(name = c)))
-      // numeric widening/narrowing per the TARGET column type: JSON-borne
-      // values arrive as the parser's native types (Long/Double/String)
-      // and the Row encoder validates exactly — a Long into an INT column
-      // threw at execution time as a 500 instead of coercing. Narrowing is
-      // RANGE-CHECKED: a value that doesn't fit the target column (or a
-      // fractional value into an integral column) is a clean client error,
-      // never a silent wrap/truncate landing corrupt data in the external
-      // database with a success response.
-      import org.apache.spark.sql.types._
-      final case class Reject(msg: String) extends RuntimeException(msg)
-      def exactIntegral(n: Number, col: String, lo: Long, hi: Long,
-                        kind: String): Long = {
+      val dialect = JdbcDialects.get(t.url)
+      val conn = DriverManager.getConnection(t.url, t.props)
+      try insertBatch(spark, conn, dialect, table, cols, records)
+      finally conn.close()
+    }
+  }
+
+  private def insertBatch(spark: SparkSession, conn: Connection, dialect: JdbcDialect,
+                          table: String, cols: Seq[String],
+                          records: Seq[Map[String, Any]]): Either[String, Long] = {
+    val schema = {
+      val st = conn.prepareStatement(dialect.getSchemaQuery(table))
+      try {
+        val rs = st.executeQuery()
+        try JdbcUtils.getSchema(conn, rs, dialect) finally rs.close()
+      } finally st.close()
+    }
+    // remote engines report folded (e.g. uppercase) names — match
+    // case-insensitively but write with the caller's spelling
+    val byLower = schema.fields.map(f => f.name.toLowerCase -> f).toMap
+    // a record column the table doesn't have is a clean client error,
+    // not a bare NoSuchElementException-turned-500
+    val unknown = cols.filterNot(c => byLower.contains(c.toLowerCase))
+    if (unknown.nonEmpty)
+      return Left(s"unknown column(s) for table '$table': " +
+        unknown.mkString(","))
+    val ordered = StructType(cols.map(c => byLower(c.toLowerCase).copy(name = c)))
+    // numeric widening/narrowing per the TARGET column type: JSON-borne
+    // values arrive as the parser's native types (Long/Double/String), and
+    // a Long into an INT column must coerce, not fail as a 500. Narrowing
+    // is RANGE-CHECKED: a value that doesn't fit the target column (or a
+    // fractional value into an integral column) is a clean client error,
+    // never a silent wrap/truncate landing corrupt data in the external
+    // database with a success response.
+    final case class Reject(msg: String) extends RuntimeException(msg)
+    def exactIntegral(n: Number, col: String, lo: Long, hi: Long,
+                      kind: String): Long = {
+      val d = n.doubleValue()
+      n match {
+        case _: java.lang.Double | _: java.lang.Float
+            if d.isNaN || d.isInfinite =>
+          throw Reject(s"non-finite value $n for $kind column '$col'")
+        case _ => ()
+      }
+      val bd = new java.math.BigDecimal(n.toString)
+      if (bd.stripTrailingZeros.scale > 0)
+        throw Reject(s"fractional value $n for $kind column '$col'")
+      val bi = bd.toBigInteger
+      if (bi.compareTo(java.math.BigInteger.valueOf(lo)) < 0 ||
+          bi.compareTo(java.math.BigInteger.valueOf(hi)) > 0)
+        throw Reject(s"value $n out of range for $kind column '$col' " +
+          s"[$lo, $hi]")
+      bi.longValue()
+    }
+    def coerce(v: Any, col: String, dt: DataType): Any = (v, dt) match {
+      case (null, _) => null
+      case (n: Number, IntegerType) =>
+        exactIntegral(n, col, Int.MinValue, Int.MaxValue, "INT").toInt
+      case (n: Number, LongType) =>
+        exactIntegral(n, col, Long.MinValue, Long.MaxValue, "BIGINT")
+      case (n: Number, DoubleType) => n.doubleValue() // widening
+      case (n: Number, FloatType) =>
         val d = n.doubleValue()
-        n match {
-          case _: java.lang.Double | _: java.lang.Float
-              if d.isNaN || d.isInfinite =>
-            throw Reject(s"non-finite value $n for $kind column '$col'")
-          case _ => ()
+        if (!d.isNaN && !d.isInfinite && math.abs(d) > Float.MaxValue)
+          throw Reject(s"value $n out of range for FLOAT column '$col'")
+        d.toFloat
+      case (n: Number, ShortType) =>
+        exactIntegral(n, col, Short.MinValue, Short.MaxValue,
+          "SMALLINT").toShort
+      case (n: Number, ByteType) =>
+        exactIntegral(n, col, Byte.MinValue, Byte.MaxValue,
+          "TINYINT").toByte
+      case (n: Number, _: DecimalType) =>
+        new java.math.BigDecimal(n.toString)
+      case (other, StringType) => other.toString
+      case (other, _) => other // bind checks the remaining combinations
+    }
+    // the setter per column type, as Spark's JDBC writer binds a row; any
+    // other value is the type error the writer's row encoder raised
+    def bind(st: PreparedStatement, i: Int, v: Any, col: String, dt: DataType): Unit =
+      (v, dt) match {
+        case (null, _) => st.setNull(i, dialect.getJDBCType(dt)
+          .orElse(JdbcUtils.getCommonJDBCType(dt)).map(_.jdbcNullType).getOrElse(Types.NULL))
+        case (x: Int, IntegerType) => st.setInt(i, x)
+        case (x: Long, LongType) => st.setLong(i, x)
+        case (x: Double, DoubleType) => st.setDouble(i, x)
+        case (x: Float, FloatType) => st.setFloat(i, x)
+        case (x: Short, ShortType) => st.setInt(i, x)
+        case (x: Byte, ByteType) => st.setInt(i, x)
+        case (x: Boolean, BooleanType) => st.setBoolean(i, x)
+        case (x: String, StringType) => st.setString(i, x)
+        case (x: java.math.BigDecimal, _: DecimalType) => st.setBigDecimal(i, x)
+        case (x: java.sql.Timestamp, TimestampType) => st.setTimestamp(i, x)
+        case (x: java.sql.Date, DateType) => st.setDate(i, x)
+        case (x: Array[Byte], BinaryType) => st.setBytes(i, x)
+        case (x, _) => throw Reject(s"value $x is not a valid ${dt.sql} for column '$col'")
+      }
+    val insert = JdbcUtils.getInsertStatement(table, ordered, Some(schema),
+      spark.sessionState.conf.caseSensitiveAnalysis, dialect)
+    conn.setAutoCommit(false)
+    try {
+      val st = conn.prepareStatement(insert)
+      try {
+        records.foreach { r =>
+          cols.zipWithIndex.foreach { case (c, i) =>
+            val dt = ordered(i).dataType
+            bind(st, i + 1, coerce(r(c), c, dt), c, dt)
+          }
+          st.addBatch()
         }
-        val bd = new java.math.BigDecimal(n.toString)
-        if (bd.stripTrailingZeros.scale > 0)
-          throw Reject(s"fractional value $n for $kind column '$col'")
-        val bi = bd.toBigInteger
-        if (bi.compareTo(java.math.BigInteger.valueOf(lo)) < 0 ||
-            bi.compareTo(java.math.BigInteger.valueOf(hi)) > 0)
-          throw Reject(s"value $n out of range for $kind column '$col' " +
-            s"[$lo, $hi]")
-        bi.longValue()
-      }
-      def coerce(v: Any, col: String, dt: DataType): Any = (v, dt) match {
-        case (null, _) => null
-        case (n: Number, IntegerType) =>
-          exactIntegral(n, col, Int.MinValue, Int.MaxValue, "INT").toInt
-        case (n: Number, LongType) =>
-          exactIntegral(n, col, Long.MinValue, Long.MaxValue, "BIGINT")
-        case (n: Number, DoubleType) => n.doubleValue() // widening
-        case (n: Number, FloatType) =>
-          val d = n.doubleValue()
-          if (!d.isNaN && !d.isInfinite && math.abs(d) > Float.MaxValue)
-            throw Reject(s"value $n out of range for FLOAT column '$col'")
-          d.toFloat
-        case (n: Number, ShortType) =>
-          exactIntegral(n, col, Short.MinValue, Short.MaxValue,
-            "SMALLINT").toShort
-        case (n: Number, ByteType) =>
-          exactIntegral(n, col, Byte.MinValue, Byte.MaxValue,
-            "TINYINT").toByte
-        case (n: Number, _: DecimalType) =>
-          new java.math.BigDecimal(n.toString)
-        case (other, StringType) if other != null => other.toString
-        case (other, _) => other // remaining combos validate in the encoder
-      }
-      val rowsOrErr =
-        try Right(records.map(r =>
-          org.apache.spark.sql.Row.fromSeq(
-            cols.map(c => coerce(r(c), c, byLower(c.toLowerCase).dataType)))))
-        catch { case Reject(m) => Left(m) }
-      rowsOrErr.map { rows =>
-        val writer = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows.toList), ordered)
-          .write.format("jdbc")
-          .option("url", t.url).option("dbtable", table)
-          .mode(SaveMode.Append)
-        t.props.stringPropertyNames().toArray(Array.empty[String])
-          .foldLeft(writer)((w, k) => w.option(k, t.props.getProperty(k))).save()
-        records.size.toLong
-      }
+        st.executeBatch()
+      } finally st.close()
+      conn.commit()
+      Right(records.size.toLong)
+    } catch {
+      case Reject(m) => conn.rollback(); Left(m)
+      case e: Throwable => conn.rollback(); throw e
     }
   }
 
@@ -212,7 +261,7 @@ object Jdbc {
     * connection, returning per-statement affected-row counts. DML runs on
     * the driver (it's a metadata-sized control operation, like the
     * reference's `cursor.execute`); bulk data movement belongs to
-    * [[truncateLoad]]/[[insertRecords]] which distribute. */
+    * [[truncateLoad]], which distributes. */
   def runScript(spark: SparkSession, t: Target,
                 script: String): Seq[Sql.StatementResult] = {
     Sql.splitStatements(script).map { stmt =>

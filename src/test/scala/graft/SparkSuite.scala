@@ -17,7 +17,9 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     graft.core.Mat.releaseAllScopes()
     super.afterAll()
   }
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = graft.core.GraftSession.requireLocalFs(SparkSession.builder()
+    // the engine's file system, so specs write files as the engine does
+    .config(graft.core.GraftSession.LocalFsConfs)
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     // the engine's codegen cache size, so specs run the engine's cache; it
@@ -30,7 +32,7 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     // run in parallel — a scoped restore of this conf races Tables.load
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    .getOrCreate())
 
   val sfDir = "/root/testdata/sf0.001"
   /** Larger driver-generated corpora, for tests that need scale contrast

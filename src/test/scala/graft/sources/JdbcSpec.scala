@@ -5,7 +5,8 @@ import java.sql.Timestamp
 import graft.SparkSuite
 import graft.catalog.Model.DbConfig
 
-/** Exercises the REAL JDBC code path (`format("jdbc")` read/write) against
+/** Exercises the REAL JDBC code paths (`format("jdbc")` read/write, and the
+  * driver-side connection of inserts and scripts) against
   * embedded Derby — the offline stand-in for the reference's MySQL/
   * PostgreSQL/SQLite targets (excel_to_db/excel_to_db.py:41-100,
   * web_scheduler.py:896-1026). */
@@ -103,6 +104,25 @@ class JdbcSpec extends SparkSuite {
       Seq(Map("id" -> 8.0, "name" -> "whole")))
     assert(whole == Right(1L), whole)
     assert(Jdbc.read(spark, t, "recs").count() == 5) // only the valid rows
+  }
+
+  test("insertRecords commits all records or none, and starts no Spark job") {
+    Jdbc.runScript(spark, t, "CREATE TABLE inbox_tx (id BIGINT, name VARCHAR(8))")
+    val recs = (1 to 5).map(i =>
+      Map[String, Any]("id" -> i.toLong, "name" -> (if (i == 5) "x" * 9 else s"n$i")))
+    // the last record is too long for its column: the database rejects it,
+    // and the four before it must not stay behind
+    intercept[Exception](Jdbc.insertRecords(spark, t, "inbox_tx", recs))
+    assert(Jdbc.read(spark, t, "inbox_tx").count() == 0)
+    var ok: Either[String, Long] = Left("not run")
+    assert(jobsDuring { ok = Jdbc.insertRecords(spark, t, "inbox_tx", recs.init) } == 0)
+    assert(ok == Right(4L))
+    assert(Jdbc.read(spark, t, "inbox_tx").count() == 4)
+    // a value the column type does not take is a clean client error
+    val typed = Jdbc.insertRecords(spark, t, "inbox_tx",
+      Seq(Map("id" -> "nine", "name" -> "n9")))
+    assert(typed.isLeft && typed.left.exists(_.contains("not a valid")), typed)
+    assert(Jdbc.read(spark, t, "inbox_tx").count() == 4)
   }
 
   test("runScript executes DML server-side and SELECTs through Spark") {
