@@ -41,19 +41,24 @@ object TempDirs {
     p.toString
   }
 
-  /** Root for SMALL, short-lived scratch (streaming stage/checkpoint/sink
+  /** Root for SMALL, short-lived scratch (streaming checkpoint and sink
     * dirs — per-call state that never outlives the query that made it):
     * `SPARK_GRAFT_SCRATCH_DIR` if set, else the fastest writable local
     * volume (`/dev/shm` when present — ephemeral stream scratch belongs on
     * memory/SSD-class storage exactly like shuffle spill under
     * `spark.local.dir`; a synchronous drive's checkpoint needs no
     * durability, its unit of recovery is the whole call), else
-    * `java.io.tmpdir`. Bulk temp (probe corpora, export round-trips) stays
-    * on [[tempDir]] — sized in GBs at the scale gates, it must not compete
-    * with executor heap for RAM-backed tmpfs. Resolved once: a scratch
-    * root that changes mid-JVM would split a query's stage and checkpoint
-    * across volumes. */
-  private lazy val scratchRoot: Path =
+    * `java.io.tmpdir`. Anything that scales with the corpus stays on
+    * [[tempDir]]: probe corpora, export round-trips, and the input the
+    * stream queries stage (q82 and q159 stage a fifth of the corpus, q96
+    * all of it). On RAM-backed tmpfs that data would compete with
+    * executor heap. Resolved once, so a query's checkpoint and sink never
+    * split across volumes.
+    *
+    * Scope: single node. Both roots are local paths of the machine that
+    * runs the session, which the local-mode executors share; a cluster
+    * deployment would stage on shared storage instead. */
+  private[graft] lazy val scratchRoot: Path =
     scratchRootFor(sys.env.get("SPARK_GRAFT_SCRATCH_DIR").filter(_.nonEmpty))
 
   /** The scratch root for a configured directory, if any. A configured
@@ -80,7 +85,8 @@ object TempDirs {
   }
 
   /** A fresh SCRATCH directory under [[scratchRoot]], swept at JVM exit —
-    * for the streaming work dirs (staged chunks, checkpoint, file sink).
+    * for the streaming work dirs (checkpoint, file sink, and the event
+    * streams' staged chunks).
     * Same lifecycle as [[tempDir]]; only the volume differs. */
   def scratchDir(prefix: String): String = {
     val p = Files.createTempDirectory(scratchRoot, prefix)

@@ -381,9 +381,7 @@ object Pipeline {
     // 100 TB this runs at write time, not per query); the QUERY path below
     // reads the stored layout — no assignment aggregate in its plan
     // (machine-asserted in BucketingSpec)
-    val table = cellTableName("graft_ivf_cells", dir)
-    Ivf.ensureCellTable(emb, "vec_id", "embedding", dim = 64, nlist = 16, table,
-      tag = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet"))
+    val table = Artifacts.ivfCells(spark, dir)
     Ivf.topKFromTable(spark, table, emb.filter(col("vec_id") < 10),
       "vec_id", "embedding", k = 5, nprobe = 16)
   }
@@ -408,11 +406,7 @@ object Pipeline {
     * degeneracy. */
   def ivfRecallProfile(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val table = cellTableName("graft_ivf_seed", dir)
-    Ivf.ensureCellTable(emb, "vec_id", "embedding", dim = 64, nlist = 16, table,
-      tag = "seed-centroids " +
-        graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet"),
-      model = Some(Ivf.seedModel(emb, "vec_id", "embedding", nlist = 16)))
+    val table = Artifacts.ivfSeed(spark, dir)
     val queries = emb.filter(col("vec_id") < 50)
     val exact = Vectors.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
       .select(col("query_id"), col("neighbor_id"))
@@ -547,11 +541,7 @@ object Pipeline {
     // pure scan of the stored codes (also what stabilized this query's
     // scale-probe variance: the per-run quantize pass left its timing
     // hostage to page-cache state)
-    val table = cellTableName("graft_int8", dir)
-    Vectors.ensureInt8Table(Tables.embeddings(spark, dir), "vec_id",
-      "embedding", table,
-      tag = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet"))
-    val withNorm = Vectors.int8FromTable(spark, table)
+    val withNorm = Vectors.int8FromTable(spark, Artifacts.int8(spark, dir))
       .select(col("id").as("vec_id"), col("v").as("embedding"),
               col("qv"), col("nsq"))
     val panel = broadcast(withNorm.filter(col("vec_id") < 50)
@@ -676,14 +666,11 @@ object Pipeline {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val st = emb.agg(max("vec_id")).head()
     val offset = if (st.isNullAt(0)) 1L else st.getLong(0) + 1L
-    val corpus = emb.filter(pmod(col("vec_id"), lit(5)) =!= 4)
-    val planted = corpus.filter(pmod(col("vec_id"), lit(25)) === 0)
+    val planted = emb.filter(Artifacts.standing("vec_id"))
+      .filter(pmod(col("vec_id"), lit(25)) === 0)
       .select((col("vec_id") + offset).as("vec_id"), col("embedding"))
-    val inc = emb.filter(pmod(col("vec_id"), lit(5)) === 4).unionByName(planted)
-    val table = cellTableName("graft_vecbkt_corpus", dir)
-    Vectors.ensureBucketTable(corpus, "vec_id", "embedding", dim = 64,
-      table = table,
-      tag = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet"))
+    val inc = emb.filter(Artifacts.increment("vec_id")).unionByName(planted)
+    val table = Artifacts.vecbktCorpus(spark, dir)
     val hits = Vectors.lshScoredPairsAgainstTable(spark, table, inc,
         "vec_id", "embedding", dim = 64, minCos = 0.9)
       .groupBy(col("query_id").as("vec_id"))
@@ -698,52 +685,16 @@ object Pipeline {
       .orderBy("vec_id")
   }
 
-  /** The shared seeded PQ ingest for q160/q161/q162: ensure the seeded
-    * IVF cell table (the coarse layer — also the cid source the code
-    * table co-locates with) and the seeded PQ code table, returning
-    * (codes table name, stored codebook). Both ensures are warm no-ops
-    * after the first build of a corpus. */
-  private[operators] def ensureSeededPq(spark: SparkSession, dir: String,
-                             m: Int, k: Int, dsub: Int): (String, Array[Int]) = {
-    // lazy: the ensures take df by-name, so a warm re-attach never pays
-    // the corpus DataFrame construction (file listing + schema job)
-    lazy val emb = Tables.embeddings(spark, dir)
-    val stamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
-    val cellTable = cellTableName("graft_ivf_seed", dir)
-    Ivf.ensureCellTable(emb, "vec_id", "embedding", dim = 64, nlist = 16,
-      cellTable, tag = "seed-centroids " + stamp,
-      model = Some(Ivf.seedModel(emb, "vec_id", "embedding", nlist = 16)))
-    val codesTable = cellTableName("graft_pq_seed", dir)
-    val cb = Vectors.ensurePqCodes(emb, "vec_id", "embedding", cellTable,
-      codesTable, m, k, dsub, tag = stamp)
-    (codesTable, cb)
-  }
-
-  /** The TRAINED-codebook PQ ingest for q162 (and the index task):
-    * ensure the trained code table (Lloyd k-means codebook via
-    * [[graft.functions.Vectors.trainedPqCodebook]], codes against the
-    * same coarse cell layout the seeded table co-locates with), returning
-    * (codes table name, stored codebook). The cache id is DERIVED from
-    * the training params so the fingerprint cannot drift from the
-    * construction; the codebook thunk only runs on a rebuild. Requires
-    * the seeded coarse cells ([[ensureSeededPq]]) to exist. */
-  private[graft] def ensureTrainedPq(spark: SparkSession, dir: String,
-      m: Int = 8, k: Int = 16, dsub: Int = 8,
-      iters: Int = 10, maxSample: Int = 100000): (String, Array[Int]) = {
-    lazy val emb = Tables.embeddings(spark, dir) // see ensureSeededPq
-    val stamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
-    val trainTable = cellTableName("graft_pq_train", dir)
-    val cb = Vectors.ensurePqCodes(emb, "vec_id", "embedding",
-      cellTableName("graft_ivf_seed", dir), trainTable, m, k, dsub,
-      tag = stamp, codebookId = s"trained-lloyd iters=$iters maxSample=$maxSample",
-      codebook = () => Some(Vectors.trainedPqCodebook(
-        emb, "vec_id", "embedding", m, k, dsub, iters = iters,
-        maxSample = maxSample)))
-    (trainTable, cb)
-  }
+  /** The seeded PQ ingest the IVF-PQ queries share: the seeded IVF cells
+    * (the coarse layer the codes co-locate with) and the seeded PQ codes,
+    * both warm no-ops after the first build of a corpus. Returns (cell
+    * table, codes). */
+  private[operators] def ensureSeededPq(spark: SparkSession,
+                                        dir: String): (String, Artifacts.Pq) =
+    (Artifacts.ivfSeed(spark, dir), Artifacts.pqSeed(spark, dir))
 
   /** ONE-CALL corpus index build — the [[Artifacts.Ensure]] entries of
-    * [[Artifacts]], in declaration order, each via its idempotent
+    * [[Artifacts]], in declaration order, each via its recipe's idempotent
     * `ensure*` (warm re-attach when the stored fingerprint matches,
     * rebuild when the corpus or any config changed). This is the
     * engine's INGEST step as a single entry point, scheduled in production
@@ -756,25 +707,18 @@ object Pipeline {
     * jobs, so a cadence-scheduled index task is a cheap no-op between
     * corpus refreshes. The registry's query-owned artifacts are built by
     * the queries that own them. */
-  def ensureCorpusIndex(spark: SparkSession, dir: String): Seq[(String, Boolean)] = {
-    val builds = Artifacts.all.collect {
-      case a @ Artifacts.Artifact(_, _, _, Artifacts.Ensure(run), _) => (a.table(dir), run)
+  def ensureCorpusIndex(spark: SparkSession, dir: String): Seq[(String, Boolean)] =
+    Artifacts.all.collect { case a @ Artifacts.Artifact(_, _, _, Artifacts.Ensure(recipe), _) =>
+      // "rebuilt" = the FULL stored fingerprint changed during the build:
+      // the ensures' own rebuild predicate, so a CONFIG-triggered rebuild
+      // (same corpus stamp, new meta) logs built, where a stamp-fragment
+      // isFresh check would misread it as warm. Each entry builds only
+      // its own tables.
+      val t = a.table(dir)
+      val before = graft.core.Warehouse.fingerprintOf(spark, t)
+      recipe(spark, dir)
+      (t, graft.core.Warehouse.fingerprintOf(spark, t) != before)
     }
-    // snapshot each artifact's FULL stored fingerprint BEFORE any build
-    // (one entry's ensure can build a sibling too — ensureSeededPq covers
-    // cells AND codes); "rebuilt" = the fingerprint changed during the
-    // task. This is the ensures' own rebuild predicate (full-meta
-    // equality), so a CONFIG-triggered rebuild — same corpus stamp, new
-    // meta — logs built, where a stamp-fragment isFresh snapshot misread
-    // it as warm and the task log lost the rebuild's trigger.
-    val before = builds.map { case (t, _) =>
-      t -> graft.core.Warehouse.fingerprintOf(spark, t)
-    }.toMap
-    builds.map { case (t, build) =>
-      build(spark, dir)
-      (t, graft.core.Warehouse.fingerprintOf(spark, t) != before(t))
-    }
-  }
 
   /** q160 — product quantization with asymmetric-distance (ADC) scoring,
     * entirely in the integer domain: int8-quantize (q158's quantizer),
@@ -802,12 +746,11 @@ object Pipeline {
     * shape). */
   def pqAdcRecall(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8
-    val (codesTable, cb) = ensureSeededPq(spark, dir, M, K, DSUB)
+    val (_, pq) = ensureSeededPq(spark, dir)
     val quant = Tables.embeddings(spark, dir)
       .select(col("vec_id"), Vectors.quantizeInt8(col("embedding")).as("qv"))
     val coded = quant.join(
-      Vectors.pqCodesFromTable(spark, codesTable)
+      Vectors.pqCodesFromTable(spark, pq.table)
         .select(col("id").as("vec_id"), col("codes")), Seq("vec_id"))
     val panel = broadcast(coded.filter(col("vec_id") < 50)
       .select(col("vec_id").as("query_id"), col("qv").as("q_qv")))
@@ -817,8 +760,7 @@ object Pipeline {
       .select(col("query_id"), col("neighbor_id"),
         graft.expressions.VectorExpressions.int8_dot(col("q_qv"), col("c_qv"))
           .as("ex"),
-        graft.expressions.VectorExpressions
-          .adc_score(col("q_qv"), col("codes"), cb, M, K, DSUB).as("adc"))
+        pq.adc(col("q_qv"), col("codes")).as("adc"))
     val we = Window.partitionBy("query_id")
       .orderBy(col("ex").desc, col("neighbor_id").asc)
     val wp = Window.partitionBy("query_id")
@@ -856,15 +798,14 @@ object Pipeline {
     * and scores from scratch in SQL. */
   def ivfPqTopK(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8; val NPROBE = 4; val TOPK = 5
+    val NPROBE = 4; val TOPK = 5
     val emb = Tables.embeddings(spark, dir)
     // the codes table IS the candidate index (r12): it carries (cid, id,
     // codes) bucketed by cid next to the cell table, so the probe scans
     // its cells' 4 B codes straight off the stored layout — no cells
     // join, no per-run corpus encode, no corpus exchange (plan-asserted
     // in BucketingSpec)
-    val (codesTable, cb) = ensureSeededPq(spark, dir, M, K, DSUB)
-    val table = cellTableName("graft_ivf_seed", dir)
+    val (table, pq) = ensureSeededPq(spark, dir)
     val queries = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         Vectors.quantizeInt8(col("embedding")).as("q_qv"))
@@ -874,13 +815,12 @@ object Pipeline {
         .orderBy(Vectors.cosine(col("q_emb"), col("cvec")).desc, col("cid").asc)))
       .filter(col("__rk") <= NPROBE)
       .select(col("query_id"), col("q_qv"), col("cid"))
-    val cand = Vectors.pqCodesFromTable(spark, codesTable)
+    val cand = Vectors.pqCodesFromTable(spark, pq.table)
       .select(col("cid"), col("id").as("neighbor_id"), col("codes"))
       .join(broadcast(probes), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        graft.expressions.VectorExpressions
-          .adc_score(col("q_qv"), col("codes"), cb, M, K, DSUB).as("adc_score"))
+        pq.adc(col("q_qv"), col("codes")).as("adc_score"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("adc_score").desc, col("neighbor_id").asc)
     cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= TOPK)
@@ -906,13 +846,10 @@ object Pipeline {
     * re-rank's value is oracle-checked, not asserted. */
   def ivfPqRerank(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8; val NPROBE = 4; val R = 20; val TOPK = 5
+    val NPROBE = 4; val R = 20; val TOPK = 5
     val emb = Tables.embeddings(spark, dir)
-    val (codesTable, cb) = ensureSeededPq(spark, dir, M, K, DSUB)
-    val cellTable = cellTableName("graft_ivf_seed", dir)
-    val int8Table = cellTableName("graft_int8", dir)
-    Vectors.ensureInt8Table(emb, "vec_id", "embedding", int8Table,
-      tag = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet"))
+    val (cellTable, pq) = ensureSeededPq(spark, dir)
+    val int8Table = Artifacts.int8(spark, dir)
     val queries = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         Vectors.quantizeInt8(col("embedding")).as("q_qv"))
@@ -924,13 +861,12 @@ object Pipeline {
       .select(col("query_id"), col("q_qv"), col("cid"))
     val wAdc = Window.partitionBy("query_id")
       .orderBy(col("adc_score").desc, col("neighbor_id").asc)
-    val shortlist = Vectors.pqCodesFromTable(spark, codesTable)
+    val shortlist = Vectors.pqCodesFromTable(spark, pq.table)
       .select(col("cid"), col("id").as("neighbor_id"), col("codes"))
       .join(broadcast(probes), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("q_qv"), col("neighbor_id"),
-        graft.expressions.VectorExpressions
-          .adc_score(col("q_qv"), col("codes"), cb, M, K, DSUB).as("adc_score"))
+        pq.adc(col("q_qv"), col("codes")).as("adc_score"))
       .withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= R)
     val wEx = Window.partitionBy("query_id")
@@ -979,20 +915,13 @@ object Pipeline {
     * ranking — end-to-end. */
   def ivfPqFilteredTopK(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8; val NPROBE = 4; val TOPK = 5
+    val NPROBE = 4; val TOPK = 5
     val LABEL = 3
     val emb = Tables.embeddings(spark, dir)
-    val stamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
-    // shared seeded cells (q152/q161/q163's coarse layout)
-    val cellTable = cellTableName("graft_ivf_seed", dir)
-    Ivf.ensureCellTable(emb, "vec_id", "embedding", dim = 64, nlist = 16,
-      cellTable, tag = "seed-centroids " + stamp,
-      model = Some(Ivf.seedModel(emb, "vec_id", "embedding", nlist = 16)))
-    // the labeled code table: same seeded codebook construction as
-    // graft_pq_seed, plus the label attribute on every code row
-    val lblTable = cellTableName("graft_pq_lbl", dir)
-    val cb = Vectors.ensurePqCodes(emb, "vec_id", "embedding", cellTable,
-      lblTable, M, K, DSUB, tag = stamp, attrs = Seq("label"))
+    // shared seeded cells (q152/q161/q163's coarse layout), and the labeled
+    // code table: graft_pq_seed's codebook plus the label on every code row
+    val cellTable = Artifacts.ivfSeed(spark, dir)
+    val pq = Artifacts.pqLbl(spark, dir)
     val queries = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         Vectors.quantizeInt8(col("embedding")).as("q_qv"))
@@ -1002,17 +931,15 @@ object Pipeline {
         .orderBy(Vectors.cosine(col("q_emb"), col("cvec")).desc, col("cid").asc)))
       .filter(col("__rk") <= NPROBE)
       .select(col("query_id"), col("q_qv"), col("cid"))
-    def adcOf(c: org.apache.spark.sql.Column, codes: org.apache.spark.sql.Column) =
-      graft.expressions.VectorExpressions.adc_score(c, codes, cb, M, K, DSUB)
     // stage 1 (narrow): probed cells, label filter IN the scan
     val narrow = graft.core.Mat.tracked(
-      Vectors.pqCodesFromTable(spark, lblTable)
+      Vectors.pqCodesFromTable(spark, pq.table)
         .filter(col("label") === LABEL)
         .select(col("cid"), col("id").as("neighbor_id"), col("codes"))
         .join(broadcast(probes), Seq("cid"))
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
-          adcOf(col("q_qv"), col("codes")).as("adc_score")))
+          pq.adc(col("q_qv"), col("codes")).as("adc_score")))
     // starvation: a query whose probed cells hold < k matching candidates
     val counts = narrow.groupBy("query_id").agg(count(lit(1)).as("n"))
     val starved = graft.core.Mat.tracked(
@@ -1021,13 +948,13 @@ object Pipeline {
         .select(col("query_id"), col("q_qv")))
     // stage 2 (wide): nprobe = nlist for the starved panel — one
     // label-filtered code scan against the broadcast starved queries
-    val wide = Vectors.pqCodesFromTable(spark, lblTable)
+    val wide = Vectors.pqCodesFromTable(spark, pq.table)
       .filter(col("label") === LABEL)
       .select(col("id").as("neighbor_id"), col("codes"))
       .crossJoin(broadcast(starved))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        adcOf(col("q_qv"), col("codes")).as("adc_score"))
+        pq.adc(col("q_qv"), col("codes")).as("adc_score"))
     val cand = narrow
       .join(starved.select("query_id"), Seq("query_id"), "left_anti")
       .unionByName(wide)
@@ -1228,36 +1155,35 @@ object Pipeline {
       else (n, s" folded=$kind$n:${java.lang.Long.toHexString(r.getLong(1))}")
     }
 
-  /** Ensure the tombstone-aware serving artifacts (seeded cells, seeded
-    * PQ codes, int8) for `dir` under the CURRENT fold state: the corpus
-    * minus all FOLDED deletions, tagged with the fold fingerprint. With
-    * an empty fold this is exactly [[ensureSeededPq]] + the int8 ensure —
-    * same tags, same shared artifacts. Returns (cellTable, codesTable,
-    * int8Table, codebook). */
-  private def ensureServeArtifacts(spark: SparkSession, dir: String,
-                                   foldTable: String)
-      : (String, String, String, Array[Int]) = {
-    val stamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
-    val (nFold, vtag) = foldState(spark, foldTable, "vec")
-    lazy val embServe = {
-      val raw = Tables.embeddings(spark, dir)
+  /** The fold view of `kind` ("vec" or "doc"): the corpus minus its FOLDED
+    * deletions, tagged with the fold fingerprint, under the plain table
+    * names. An empty fold is the plain corpus with the plain tags, so
+    * every [[Artifacts]] entry built over it is exactly the plain one.
+    * Returns (folded count, view). */
+  private[graft] def foldView(spark: SparkSession, dir: String, foldTable: String,
+                              kind: String): (Long, Artifacts.View) = {
+    val (source, id) =
+      if (kind == "vec") (Artifacts.Embeddings, "vec_id") else (Artifacts.Documents, "doc_id")
+    val (nFold, tag) = foldState(spark, foldTable, kind)
+    (nFold, new Artifacts.View(spark, dir, {
+      val raw = source.corpus(spark, dir)
       if (nFold == 0L) raw
       else raw.join(broadcast(
           graft.core.Warehouse.readGrowableTable(spark, foldTable)
-            .filter(col("kind") === "vec").select(col("id").as("vec_id"))),
-        Seq("vec_id"), "left_anti")
-    }
-    val cellTable = cellTableName("graft_ivf_seed", dir)
-    Ivf.ensureCellTable(embServe, "vec_id", "embedding", dim = 64, nlist = 16,
-      cellTable, tag = "seed-centroids " + stamp + vtag,
-      model = Some(Ivf.seedModel(embServe, "vec_id", "embedding", nlist = 16)))
-    val codesTable = cellTableName("graft_pq_seed", dir)
-    val cb = Vectors.ensurePqCodes(embServe, "vec_id", "embedding", cellTable,
-      codesTable, 8, 16, 8, tag = stamp + vtag)
-    val int8Table = cellTableName("graft_int8", dir)
-    Vectors.ensureInt8Table(embServe, "vec_id", "embedding", int8Table,
-      tag = stamp + vtag)
-    (cellTable, codesTable, int8Table, cb)
+            .filter(col("kind") === kind).select(col("id").as(id))),
+        Seq(id), "left_anti")
+    }, tag))
+  }
+
+  /** Ensure the tombstone-aware serving artifacts (the [[Artifacts]]
+    * entries ivf_seed, pq_seed and int8) over the vector fold view
+    * ([[foldView]]): with an empty fold these are the plain entries'
+    * artifacts. Returns (cellTable, codes, int8Table). */
+  private def ensureServeArtifacts(spark: SparkSession, dir: String,
+                                   foldTable: String)
+      : (String, Artifacts.Pq, String) = {
+    val (_, v) = foldView(spark, dir, foldTable, "vec")
+    (Artifacts.ivfSeed(v), Artifacts.pqSeed(v), Artifacts.int8(v))
   }
 
   /** Record deletions: append `ids` (single column `id`) of `kind` to the
@@ -1358,9 +1284,9 @@ object Pipeline {
                                          dir: String,
                                          ns: String = ""): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8; val NPROBE = 4; val R = 20; val TOPK = 5
+    val NPROBE = 4; val R = 20; val TOPK = 5
     val fold = ensureFoldedTable(spark, dir, ns)
-    val (cellTable, codesTable, int8Table, cb) =
+    val (cellTable, pq, int8Table) =
       ensureServeArtifacts(spark, dir, fold)
     val ts = ensureTombstoneTable(spark, dir, ns)
     // cross-session delete freshness rides readGrowableTable's stamp-
@@ -1381,14 +1307,13 @@ object Pipeline {
     val wAdc = Window.partitionBy("query_id")
       .orderBy(col("adc_score").desc, col("neighbor_id").asc)
     val shortlist = notTombstoned(spark, ts, "vec",
-      Vectors.pqCodesFromTable(spark, codesTable)
+      Vectors.pqCodesFromTable(spark, pq.table)
         .select(col("cid"), col("id").as("neighbor_id"), col("codes")),
       "neighbor_id")
       .join(broadcast(probes), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("q_qv"), col("neighbor_id"),
-        graft.expressions.VectorExpressions
-          .adc_score(col("q_qv"), col("codes"), cb, M, K, DSUB).as("adc_score"))
+        pq.adc(col("q_qv"), col("codes")).as("adc_score"))
       .withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= R)
     val wEx = Window.partitionBy("query_id")
@@ -1420,8 +1345,12 @@ object Pipeline {
     * and the next run finishes idempotently; the truncate happens LAST,
     * only after every rebuild succeeded.
     *
+    * Every rebuild is the [[Artifacts]] entry's own recipe over the fold
+    * view ([[foldView]]), so the vacuumed and the plain artifact differ
+    * only in their corpus and tag suffix.
+    *
     * Cohabitation note: a vacuumed artifact's meta differs from the plain
-    * ensure tag, so running the full-corpus gated queries on a vacuumed
+    * entry's tag, so running the full-corpus gated queries on a vacuumed
     * corpus rebuilds the artifacts back (and vice versa) — wasted work,
     * never a wrong answer. Serve vacuum-maintained corpora through the
     * tombstone-aware probes.
@@ -1454,37 +1383,13 @@ object Pipeline {
     //    fingerprint and rebuilds from corpus-minus-folded; a vacuum
     //    re-run (crash recovery) warm-attaches everything here
     ensureServeArtifacts(spark, dir, fold)
-    val embStamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
-    val (nVecFold, vtag) = foldState(spark, fold, "vec")
+    val (nVecFold, vecView) = foldView(spark, dir, fold, "vec")
     if (nVecFold > 0L) {
-      lazy val embF = Tables.embeddings(spark, dir)
-        .join(broadcast(
-          graft.core.Warehouse.readGrowableTable(spark, fold)
-            .filter(col("kind") === "vec")
-            .select(col("id").as("vec_id"))), Seq("vec_id"), "left_anti")
-      Vectors.ensurePqCodes(embF, "vec_id", "embedding",
-        cellTableName("graft_ivf_seed", dir),
-        cellTableName("graft_pq_lbl", dir), 8, 16, 8, tag = embStamp + vtag,
-        attrs = Seq("label"))
-      Vectors.ensureBucketTable(
-        embF.filter(pmod(col("vec_id"), lit(5)) =!= 4), "vec_id", "embedding",
-        dim = 64, table = cellTableName("graft_vecbkt_corpus", dir),
-        tag = embStamp + vtag)
+      Artifacts.pqLbl(vecView)
+      Artifacts.vecbktCorpus(vecView)
     }
-    val (nDocFold, dtag) = foldState(spark, fold, "doc")
-    if (nDocFold > 0L) {
-      val docStamp = graft.core.Warehouse.sourceStamp(s"$dir/documents.parquet")
-      lazy val docsF = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"))
-        .join(broadcast(
-          graft.core.Warehouse.readGrowableTable(spark, fold)
-            .filter(col("kind") === "doc")
-            .select(col("id").as("doc_id"))), Seq("doc_id"), "left_anti")
-      Dedup.ensureSignatureTable(
-        docsF.filter(pmod(col("doc_id"), lit(5)) =!= 4), "doc_id", "text",
-        cellTableName("graft_sig_corpus", dir), k = 48, bands = 12,
-        tag = docStamp + dtag)
-    }
+    val (nDocFold, docView) = foldView(spark, dir, fold, "doc")
+    if (nDocFold > 0L) Artifacts.sigCorpus(docView)
     // 3. EMPTY the active list — LAST, only after every rebuild landed.
     //    A crash anywhere above leaves results correct: the serving
     //    anti-join still covers whatever the rebuilds haven't folded yet,
@@ -1514,12 +1419,8 @@ object Pipeline {
     * layout by construction. */
   private[graft] def ensureVectorGrowState(spark: SparkSession, dir: String,
                                            ns: String = ""): (String, String) = {
-    lazy val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val corpusTable = cellTableName("graft_vecbkt_adm", dir)
-    Vectors.ensureBucketTable(emb, "vec_id", "embedding", dim = 64,
-      table = corpusTable,
-      tag = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet"))
+    val corpusTable = Artifacts.vecbktCorpus.whole(new Artifacts.View(spark, dir,
+      Artifacts.Embeddings.corpus(spark, dir), qualifier = Some("_adm")))
     val growTable = cellTableName("graft_vecbkt_grow" + nsSfx(ns), dir)
     // freeze the growable layout to the FROZEN corpus table's resolved
     // bits: the standing corpus dominates the mass, and both probes then
@@ -1673,9 +1574,12 @@ object Pipeline {
     * admitted view (growable standing state over the promoted overlay —
     * [[resolvedAdmittedState]]) into a stored GROWN serving-artifact
     * family — seeded cells, seeded PQ codes, int8, LSH buckets over
-    * (corpus − FOLDED removals) ∪ admitted — each through its normal
-    * ensure* under a fingerprint carrying the corpus stamp + the folded-
-    * removal and grow fingerprints, so the ensures' own rebuild contract
+    * (corpus − FOLDED removals) ∪ admitted — each through its
+    * [[Artifacts]] entry's recipe over the grown view
+    * ([[grownVectorView]]: a fingerprint carrying the corpus stamp + the
+    * folded-removal and grow fingerprints, table qualifier `_grown<ns>`;
+    * the LSH buckets cover the whole view, as vecbkt_adm covers the whole
+    * corpus), so the ensures' own rebuild contract
     * drives the work: a replayed fold (crash recovery, every warm serve)
     * re-attaches with zero build jobs and bit-identical artifacts; new
     * admissions, new overlay generations, and newly FOLDED removals
@@ -1689,53 +1593,57 @@ object Pipeline {
     * construction; at 100 TB the grown family IS the production index
     * and the plain family is the frozen snapshot evals pin against).
     * Seeds/codebook stay the 16 lowest ids — admitted ids are higher by
-    * the id contract, so an EMPTY fold yields artifacts identical to the
-    * plain family's. The LABELED code table (q164's filtered-ANN
-    * artifact) grows through [[promoteAdmittedVectorsLabeled]] when the
-    * ingest stream carries label attrs (q171).
-    * Returns (cellTable, codesTable, int8Table, codebook). */
+    * the id contract, so an EMPTY fold yields the rows of the plain
+    * ivf_seed, pq_seed, int8 and vecbkt_adm (ArtifactsSpec pins it). The
+    * LABELED code table (q164's filtered-ANN artifact) grows through
+    * [[promoteAdmittedVectorsLabeled]] when the ingest stream carries
+    * label attrs (q171).
+    * Returns (cellTable, codes, int8Table). */
   private[graft] def promoteAdmittedVectors(spark: SparkSession, dir: String,
                                             ns: String = "")
-      : (String, String, String, Array[Int]) = {
+      : (String, Artifacts.Pq, String) = {
+    val v = grownVectorView(spark, dir, ns, withLabels = false)
+    val family = (Artifacts.ivfSeed(v), Artifacts.pqSeed(v), Artifacts.int8(v))
+    // the LSH bucket serving artifact grows too (the q41/q154-family
+    // probe side): admitted vectors must be FOUND by similarity probes,
+    // not only returned by the ANN panel
+    Artifacts.vecbktCorpus.whole(v)
+    family
+  }
+
+  /** The grown vector view of namespace `ns`: (corpus − FOLDED removals) ∪
+    * the resolved admitted view, tagged with the folded-removal and grow
+    * fingerprints, under the table qualifier `_grown<ns>`. With labels,
+    * corpus rows keep the source's label and admitted rows take the side
+    * table's (−1 when they carried none, matching no filter). */
+  private def grownVectorView(spark: SparkSession, dir: String, ns: String,
+                              withLabels: Boolean): Artifacts.View = {
     val (_, growTable) = ensureVectorGrowState(spark, dir, ns)
     val fold = ensureFoldedTable(spark, dir, ns)
     val pTable = ensurePromotedVecTable(spark, dir, ns)
-    val stamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
     val (nGrow, gtag, admitted) =
       resolvedAdmittedState(spark, growTable, pTable)
     // FOLDED removals only: deletes between folds ride [[grownServe]]'s
     // broadcast anti-join instead of forcing a rebuild per delete (r16
     // verdict ask #4); the upsert path folds its removals synchronously
     val (nRem, rtag, removedIds) = foldedRemovalState(spark, fold, "vec")
-    lazy val embAll = {
+    val labels = if (withLabels) Some(ensureAdmittedLabelTable(spark, dir, ns)) else None
+    new Artifacts.View(spark, dir, {
       val raw = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"))
+        .select((Seq("vec_id", "embedding") ++ labels.map(_ => "label")).map(col): _*)
       val base =
         if (nRem == 0L) raw
         else raw.join(broadcast(removedIds.select(col("id").as("vec_id"))),
           Seq("vec_id"), "left_anti")
+      val adm = admitted.select(col("id").as("vec_id"), col("v").as("embedding"))
       if (nGrow == 0L) base
-      else base.unionByName(
-        admitted.select(col("id").as("vec_id"), col("v").as("embedding")))
-    }
-    val tag = stamp + rtag + gtag
-    val cellTable = cellTableName("graft_ivf_grown" + nsSfx(ns), dir)
-    Ivf.ensureCellTable(embAll, "vec_id", "embedding", dim = 64, nlist = 16,
-      cellTable, tag = "seed-centroids " + tag,
-      model = Some(Ivf.seedModel(embAll, "vec_id", "embedding", nlist = 16)))
-    val codesTable = cellTableName("graft_pq_grown" + nsSfx(ns), dir)
-    val cb = Vectors.ensurePqCodes(embAll, "vec_id", "embedding", cellTable,
-      codesTable, 8, 16, 8, tag = tag)
-    val int8Table = cellTableName("graft_int8_grown" + nsSfx(ns), dir)
-    Vectors.ensureInt8Table(embAll, "vec_id", "embedding", int8Table,
-      tag = tag)
-    // the LSH bucket serving artifact grows too (the q41/q154-family
-    // probe side): admitted vectors must be FOUND by similarity probes,
-    // not only returned by the ANN panel
-    Vectors.ensureBucketTable(embAll, "vec_id", "embedding", dim = 64,
-      table = cellTableName("graft_vecbkt_grown" + nsSfx(ns), dir),
-      tag = tag)
-    (cellTable, codesTable, int8Table, cb)
+      else base.unionByName(labels.fold(adm)(t => adm
+        .join(graft.core.Warehouse.readGrowableTable(spark, t)
+            .select(col("id").as("vec_id"), col("label")),
+          Seq("vec_id"), "left")
+        .select(col("vec_id"), col("embedding"),
+          coalesce(col("label"), lit(-1)).cast("int").as("label"))))
+    }, rtag + gtag, Some("_grown" + nsSfx(ns)))
   }
 
   /** Two-stage IVF-PQ serving (q163's exact shape) over the GROWN
@@ -1752,8 +1660,8 @@ object Pipeline {
   private[graft] def grownServe(spark: SparkSession, dir: String,
                                 ns: String = ""): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8; val NPROBE = 4; val R = 20; val TOPK = 5
-    val (cellTable, codesTable, int8Table, cb) =
+    val NPROBE = 4; val R = 20; val TOPK = 5
+    val (cellTable, pq, int8Table) =
       promoteAdmittedVectors(spark, dir, ns)
     val ts = ensureTombstoneTable(spark, dir, ns)
     val fold = ensureFoldedTable(spark, dir, ns)
@@ -1781,14 +1689,13 @@ object Pipeline {
       .select(col("query_id"), col("q_qv"), col("cid"))
     val wAdc = Window.partitionBy("query_id")
       .orderBy(col("adc_score").desc, col("neighbor_id").asc)
-    val shortlist = exRemoved(Vectors.pqCodesFromTable(spark, codesTable)
+    val shortlist = exRemoved(Vectors.pqCodesFromTable(spark, pq.table)
       .select(col("cid"), col("id").as("neighbor_id"), col("codes")),
         "neighbor_id")
       .join(broadcast(probes), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("q_qv"), col("neighbor_id"),
-        graft.expressions.VectorExpressions
-          .adc_score(col("q_qv"), col("codes"), cb, M, K, DSUB).as("adc_score"))
+        pq.adc(col("q_qv"), col("codes")).as("adc_score"))
       .withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= R)
     val wEx = Window.partitionBy("query_id")
@@ -2049,41 +1956,14 @@ object Pipeline {
     * is ensured beside it under the same fingerprint (corpus labels from
     * the source table, admitted labels from the side table; an admitted
     * row that never carried a label codes as label −1, matching no
-    * filter). Returns (cellTable, labeledCodesTable, codebook). */
+    * filter). Returns (cellTable, labeled codes, int8Table). */
   private[graft] def promoteAdmittedVectorsLabeled(spark: SparkSession,
                                                    dir: String,
                                                    ns: String = "")
-      : (String, String, Array[Int]) = {
-    val (cellTable, _, _, _) = promoteAdmittedVectors(spark, dir, ns)
-    val (_, growTable) = ensureVectorGrowState(spark, dir, ns)
-    val pTable = ensurePromotedVecTable(spark, dir, ns)
-    val lblTable = ensureAdmittedLabelTable(spark, dir, ns)
-    val fold = ensureFoldedTable(spark, dir, ns)
-    val stamp = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet")
-    val (nGrow, gtag, admitted) =
-      resolvedAdmittedState(spark, growTable, pTable)
-    val (nRem, rtag, removedIds) = foldedRemovalState(spark, fold, "vec")
-    lazy val embAllLbl = {
-      val raw = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val base =
-        if (nRem == 0L) raw
-        else raw.join(broadcast(removedIds.select(col("id").as("vec_id"))),
-          Seq("vec_id"), "left_anti")
-      if (nGrow == 0L) base
-      else base.unionByName(
-        admitted.select(col("id").as("vec_id"), col("v").as("embedding"))
-          .join(graft.core.Warehouse.readGrowableTable(spark, lblTable)
-              .select(col("id").as("vec_id"), col("label")),
-            Seq("vec_id"), "left")
-          .select(col("vec_id"), col("embedding"),
-            coalesce(col("label"), lit(-1)).cast("int").as("label")))
-    }
-    val codesTable = cellTableName("graft_pq_lbl_grown" + nsSfx(ns), dir)
-    val cb = Vectors.ensurePqCodes(embAllLbl, "vec_id", "embedding",
-      cellTable, codesTable, 8, 16, 8, tag = stamp + rtag + gtag,
-      attrs = Seq("label"))
-    (cellTable, codesTable, cb)
+      : (String, Artifacts.Pq, String) = {
+    val (cellTable, _, int8Table) = promoteAdmittedVectors(spark, dir, ns)
+    (cellTable, Artifacts.pqLbl(grownVectorView(spark, dir, ns, withLabels = true)),
+      int8Table)
   }
 
   /** q171 — FILTERED ANN OVER THE GROWN CORPUS (q164 ∘ q166): the
@@ -2098,7 +1978,7 @@ object Pipeline {
     * widening + ranking over the union base end-to-end. */
   def grownFilteredServe(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8; val NPROBE = 4; val TOPK = 5
+    val NPROBE = 4; val TOPK = 5
     val LABEL = 3
     resetGateNamespaceIfStale(spark, dir, "q171")
     val emb = Tables.embeddings(spark, dir)
@@ -2112,9 +1992,8 @@ object Pipeline {
             reverse(col("embedding")).as("embedding"), col("label")),
         ns = "q171")
     }
-    val (cellTable, codesTable, cb) =
+    val (cellTable, pq, int8Table) =
       promoteAdmittedVectorsLabeled(spark, dir, ns = "q171")
-    val int8Table = cellTableName("graft_int8_grown_q171", dir)
     val queries = Vectors.int8FromTable(spark, int8Table)
       .filter(col("id") < 50)
       .select(col("id").as("query_id"), col("v").as("q_emb"),
@@ -2125,28 +2004,26 @@ object Pipeline {
         .orderBy(Vectors.cosine(col("q_emb"), col("cvec")).desc, col("cid").asc)))
       .filter(col("__rk") <= NPROBE)
       .select(col("query_id"), col("q_qv"), col("cid"))
-    def adcOf(c: org.apache.spark.sql.Column, codes: org.apache.spark.sql.Column) =
-      graft.expressions.VectorExpressions.adc_score(c, codes, cb, M, K, DSUB)
     val narrow = graft.core.Mat.tracked(
-      Vectors.pqCodesFromTable(spark, codesTable)
+      Vectors.pqCodesFromTable(spark, pq.table)
         .filter(col("label") === LABEL)
         .select(col("cid"), col("id").as("neighbor_id"), col("codes"))
         .join(broadcast(probes), Seq("cid"))
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
-          adcOf(col("q_qv"), col("codes")).as("adc_score")))
+          pq.adc(col("q_qv"), col("codes")).as("adc_score")))
     val counts = narrow.groupBy("query_id").agg(count(lit(1)).as("n"))
     val starved = graft.core.Mat.tracked(
       queries.join(counts, Seq("query_id"), "left")
         .filter(coalesce(col("n"), lit(0L)) < TOPK)
         .select(col("query_id"), col("q_qv")))
-    val wide = Vectors.pqCodesFromTable(spark, codesTable)
+    val wide = Vectors.pqCodesFromTable(spark, pq.table)
       .filter(col("label") === LABEL)
       .select(col("id").as("neighbor_id"), col("codes"))
       .crossJoin(broadcast(starved))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        adcOf(col("q_qv"), col("codes")).as("adc_score"))
+        pq.adc(col("q_qv"), col("codes")).as("adc_score"))
     val cand = narrow
       .join(starved.select("query_id"), Seq("query_id"), "left_anti")
       .unionByName(wide)
@@ -2209,30 +2086,24 @@ object Pipeline {
     * path. Fingerprinted by the corpus stamp + doc removal + admitted-id
     * fingerprints; replayed folds warm-attach. Returns the grown table. */
   private[graft] def promoteAdmittedDocs(spark: SparkSession, dir: String,
-                                         ns: String = ""): String = {
-    val (docsAll, tag) = grownDocsBase(spark, dir, ns)
-    val grown = cellTableName("graft_sig_grown" + nsSfx(ns), dir)
-    Dedup.ensureSignatureTable(docsAll(), "doc_id", "text", grown,
-      k = 48, bands = 12, tag = tag)
-    grown
-  }
+                                         ns: String = ""): String =
+    Artifacts.sigCorpus.whole(grownDocsView(spark, dir, ns))
 
-  /** The GROWN DOC BASE of a namespace — (corpus − removed docs) ∪
-    * admitted, as a thunk (a warm ensure must not pay the frame's
-    * construction) plus the fold fingerprint every doc-side grown
-    * artifact tags with. Factored from [[promoteAdmittedDocs]] so the
-    * signature fold and the grown TERM INDEX ([[ensureGrownTermIndex]])
-    * are built from the same base and invalidate together. */
-  private def grownDocsBase(spark: SparkSession, dir: String,
-                            ns: String): (() => DataFrame, String) = {
+  /** The GROWN DOC VIEW of a namespace — (corpus − removed docs) ∪
+    * admitted, tagged with the removal and grow fingerprints every
+    * doc-side grown artifact carries, under the table qualifier
+    * `_grown<ns>`. Factored from [[promoteAdmittedDocs]] so the signature
+    * fold and the grown TERM INDEX ([[ensureGrownTermIndex]]) are built
+    * from the same base and invalidate together. */
+  private def grownDocsView(spark: SparkSession, dir: String,
+                            ns: String): Artifacts.View = {
     val (_, admTable) = ensureDocGrowState(spark, dir, ns)
     val ts = ensureTombstoneTable(spark, dir, ns)
     val fold = ensureFoldedTable(spark, dir, ns)
-    val docStamp = graft.core.Warehouse.sourceStamp(s"$dir/documents.parquet")
     val (nGrow, gtag) = growStateOf(spark, admTable, "doc_id")
     val (nRem, rtag, removedIds) = removalState(spark, ts, fold, "doc")
-    def docsAll = {
-      val raw = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    new Artifacts.View(spark, dir, {
+      val raw = Artifacts.Documents.corpus(spark, dir)
       val base =
         if (nRem == 0L) raw
         else raw.join(broadcast(removedIds.select(col("id").as("doc_id"))),
@@ -2241,8 +2112,7 @@ object Pipeline {
       else base.unionByName(
         graft.core.Warehouse.readGrowableTable(spark, admTable)
           .select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
-    }
-    (() => docsAll, docStamp + rtag + gtag)
+    }, rtag + gtag, Some("_grown" + nsSfx(ns)))
   }
 
   /** The grown TERM INDEX of a doc-grow namespace: [[ensureCorpusTermIndex]]
@@ -2251,10 +2121,10 @@ object Pipeline {
     * table serves dedup probes. Returns (postingTable, dfTable). */
   private[graft] def ensureGrownTermIndex(spark: SparkSession, dir: String,
                                           ns: String): (String, String) = {
-    val (docsAll, tag) = grownDocsBase(spark, dir, ns)
+    val v = grownDocsView(spark, dir, ns)
     val t = cellTableName("graft_terms_grown" + nsSfx(ns), dir)
-    graft.functions.TermIndex.ensureTermIndex(
-      docsAll(), "doc_id", "text", t, tag = tag)
+    graft.functions.TermIndex.ensureTermIndex(v.corpus, "doc_id", "text", t,
+      tag = Artifacts.Documents.stamp(dir) + v.tagSuffix)
     (t, t + "_df")
   }
 
@@ -2302,13 +2172,11 @@ object Pipeline {
     // out of their bh-bucketed tables, zero signature computation at serve
     // time. The stored rows are bandedSignatures' exact output, so the
     // candidate set — and the verified pair set — is bit-identical.
-    val (_, foldTag) = grownDocsBase(spark, dir, "q169")
-    val panelTable = cellTableName("graft_sig_panel_q169", dir)
-    Dedup.ensureSignatureTable(probes, "doc_id", "text", panelTable,
-      k = 48, bands = 12, tag = foldTag)
+    val panelTable = Artifacts.sigCorpus.whole(new Artifacts.View(spark, dir, probes,
+      grownDocsView(spark, dir, "q169").tagSuffix, Some("_panel_q169")))
     val cand = graft.core.Mat.tracked(
       Dedup.minhashCandidatesTableVsTable(spark, panelTable, grownTable,
-          k = 48, bands = 12, threshold = 0.2)
+          k = Artifacts.SigK, bands = Artifacts.SigBands, threshold = 0.2)
         .select(col("inc_id"), col("corpus_id")))
     verifyPairsExact(union.unionByName(probes), cand, "inc_id", "corpus_id",
         theta = 0.9)
@@ -2341,7 +2209,7 @@ object Pipeline {
     * two-stage ANN + the fusion end-to-end. */
   def hybridRetrieval(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8; val NPROBE = 4
+    val NPROBE = 4
     val R2 = 20; val R = 10; val RRF_K = 60; val TOPK = 5
     // ── lexical arm: q130's stored-index probe — top-3 df terms are
     // the query panel (query_id = df rank), docs ranked by tf/df
@@ -2360,11 +2228,8 @@ object Pipeline {
         col("r").cast("int").as("term_rank"))
     // ── vector arm: q163's two-stage serving over the same panel ids
     val emb = Tables.embeddings(spark, dir)
-    val (codesTable, cb) = ensureSeededPq(spark, dir, M, K, DSUB)
-    val cellTable = cellTableName("graft_ivf_seed", dir)
-    val int8Table = cellTableName("graft_int8", dir)
-    Vectors.ensureInt8Table(emb, "vec_id", "embedding", int8Table,
-      tag = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet"))
+    val (cellTable, pq) = ensureSeededPq(spark, dir)
+    val int8Table = Artifacts.int8(spark, dir)
     val queries = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         Vectors.quantizeInt8(col("embedding")).as("q_qv"))
@@ -2376,13 +2241,12 @@ object Pipeline {
       .select(col("query_id"), col("q_qv"), col("cid"))
     val wAdc = Window.partitionBy("query_id")
       .orderBy(col("adc_score").desc, col("neighbor_id").asc)
-    val shortlist = Vectors.pqCodesFromTable(spark, codesTable)
+    val shortlist = Vectors.pqCodesFromTable(spark, pq.table)
       .select(col("cid"), col("id").as("neighbor_id"), col("codes"))
       .join(broadcast(probes), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("q_qv"), col("neighbor_id"),
-        graft.expressions.VectorExpressions
-          .adc_score(col("q_qv"), col("codes"), cb, M, K, DSUB).as("adc_score"))
+        pq.adc(col("q_qv"), col("codes")).as("adc_score"))
       .withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= R2)
     val wEx = Window.partitionBy("query_id")
@@ -2431,7 +2295,7 @@ object Pipeline {
     * both unions, tf/df, the two-stage ANN, and the fusion end-to-end. */
   def grownHybridRetrieval(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8; val NPROBE = 4
+    val NPROBE = 4
     val R2 = 20; val R = 10; val RRF_K = 60; val TOPK = 5
     resetGateNamespaceIfStale(spark, dir, "q166")
     resetGateNamespaceIfStale(spark, dir, "q169")
@@ -2447,7 +2311,7 @@ object Pipeline {
           .select((col("vec_id") + lit(10000000L)).as("vec_id"),
             reverse(col("embedding")).as("embedding")), ns = "q166")
     }
-    val (cellTable, codesTable, int8Table, cb) =
+    val (cellTable, pq, int8Table) =
       promoteAdmittedVectors(spark, dir, ns = "q166")
     // ── grown DOC state (q169's convention, shared step marker) + index
     gateStepOnce(spark, dir, "q169", "admitdocs-mod31", guards = Seq(
@@ -2488,13 +2352,12 @@ object Pipeline {
       .select(col("query_id"), col("q_qv"), col("cid"))
     val wAdc = Window.partitionBy("query_id")
       .orderBy(col("adc_score").desc, col("neighbor_id").asc)
-    val shortlist = Vectors.pqCodesFromTable(spark, codesTable)
+    val shortlist = Vectors.pqCodesFromTable(spark, pq.table)
       .select(col("cid"), col("id").as("neighbor_id"), col("codes"))
       .join(broadcast(probes), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("q_qv"), col("neighbor_id"),
-        graft.expressions.VectorExpressions
-          .adc_score(col("q_qv"), col("codes"), cb, M, K, DSUB).as("adc_score"))
+        pq.adc(col("q_qv"), col("codes")).as("adc_score"))
       .withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= R2)
     val wEx = Window.partitionBy("query_id")
@@ -2557,15 +2420,9 @@ object Pipeline {
     * distortion bar is the data-independent claim. */
   def pqTrainedAudit(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val M = 8; val K = 16; val DSUB = 8
-    // training params once, fingerprint derived from THEM — a hand-kept
-    // id string drifted from the construction would silently re-attach a
-    // stale artifact after a param change (r12 advisor note)
-    val ITERS = 10; val MAX_SAMPLE = 100000
-    val (seedTable, seedCb) = ensureSeededPq(spark, dir, M, K, DSUB)
+    val (_, seed) = ensureSeededPq(spark, dir)
     val emb = Tables.embeddings(spark, dir)
-    val (trainTable, trainCb) =
-      ensureTrainedPq(spark, dir, M, K, DSUB, ITERS, MAX_SAMPLE)
+    val trained = Artifacts.pqTrain(spark, dir)
     val quant = emb.select(col("vec_id"),
       Vectors.quantizeInt8(col("embedding")).as("qv"))
     // `coded` is consumed by three branches (panel, errs, dists) — three
@@ -2582,9 +2439,9 @@ object Pipeline {
     // storage. (The r12 review deferred a withMaterialized wrap here; the
     // measurement rejects it.)
     val coded = quant
-      .join(Vectors.pqCodesFromTable(spark, seedTable)
+      .join(Vectors.pqCodesFromTable(spark, seed.table)
         .select(col("id").as("vec_id"), col("codes").as("codes_s")), Seq("vec_id"))
-      .join(Vectors.pqCodesFromTable(spark, trainTable)
+      .join(Vectors.pqCodesFromTable(spark, trained.table)
         .select(col("id").as("vec_id"), col("codes").as("codes_t")), Seq("vec_id"))
     val panel = broadcast(coded.filter(col("vec_id") < 50)
       .select(col("vec_id").as("query_id"), col("qv").as("q_qv")))
@@ -2601,10 +2458,8 @@ object Pipeline {
       .select(
         graft.expressions.VectorExpressions.int8_dot(col("q_qv"), col("c_qv"))
           .as("ex"),
-        graft.expressions.VectorExpressions
-          .adc_score(col("q_qv"), col("codes_s"), seedCb, M, K, DSUB).as("adc_s"),
-        graft.expressions.VectorExpressions
-          .adc_score(col("q_qv"), col("codes_t"), trainCb, M, K, DSUB).as("adc_t"))
+        seed.adc(col("q_qv"), col("codes_s")).as("adc_s"),
+        trained.adc(col("q_qv"), col("codes_t")).as("adc_t"))
       .agg(
         count(lit(1)).as("n_pairs"),
         sum(abs(col("ex") - col("adc_s"))).as("err_s"),
@@ -2612,9 +2467,9 @@ object Pipeline {
     // corpus quantization distortion under each codebook, from the STORED
     // codes (no re-encode): one narrow scan, global partial aggregate
     val dists = coded.agg(
-      sum(Vectors.pqDistortion(col("qv"), col("codes_s"), seedCb, M, K, DSUB))
+      sum(seed.distortion(col("qv"), col("codes_s")))
         .as("dist_s"),
-      sum(Vectors.pqDistortion(col("qv"), col("codes_t"), trainCb, M, K, DSUB))
+      sum(trained.distortion(col("qv"), col("codes_t")))
         .as("dist_t"))
     errs
       .crossJoin(dists) // two one-row aggregates — broadcast, not cartesian
@@ -2650,16 +2505,14 @@ object Pipeline {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val st = emb.agg(max("vec_id")).head()
     val offset = if (st.isNullAt(0)) 1L else st.getLong(0) + 1L
-    val corpus = emb.filter(pmod(col("vec_id"), lit(5)) =!= 4)
-    val planted = corpus.filter(pmod(col("vec_id"), lit(25)) === 0)
+    val planted = emb.filter(Artifacts.standing("vec_id"))
+      .filter(pmod(col("vec_id"), lit(25)) === 0)
       .select((col("vec_id") + offset).as("vec_id"), col("embedding"))
-    val inc = emb.filter(pmod(col("vec_id"), lit(5)) === 4).unionByName(planted)
-    val table = cellTableName("graft_vecbkt_corpus", dir)
-    Vectors.ensureBucketTable(corpus, "vec_id", "embedding", dim = 64,
-      table = table,
-      tag = graft.core.Warehouse.sourceStamp(s"$dir/embeddings.parquet"))
+    val inc = emb.filter(Artifacts.increment("vec_id")).unionByName(planted)
+    val table = Artifacts.vecbktCorpus(spark, dir)
     val work = graft.core.TempDirs.scratchDir("graft-q159")
-    val stage = s"$work/stage"; val out = s"$work/out"; val ckpt = s"$work/ckpt"
+    val out = s"$work/out"; val ckpt = s"$work/ckpt"
+    val stage = graft.core.TempDirs.tempDir("graft-q159-stage")
     inc.repartition(4).write.mode("overwrite").parquet(stage)
     val schema = new org.apache.spark.sql.types.StructType()
       .add("vec_id", "long")
@@ -3606,14 +3459,10 @@ object Pipeline {
     * stored-table path must produce the identical verified pair set. */
   def incrementalMinhashStored(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val table = cellTableName("graft_sig_corpus", dir)
-    Dedup.ensureSignatureTable(
-      docs.filter(pmod(col("doc_id"), lit(5)) =!= 4), "doc_id", "text", table,
-      k = 48, bands = 12,
-      tag = graft.core.Warehouse.sourceStamp(s"$dir/documents.parquet"))
+    val table = Artifacts.sigCorpus(spark, dir)
     val cand = Dedup.minhashCandidatesAgainstTable(spark, table,
-        docs.filter(pmod(col("doc_id"), lit(5)) === 4),
-        "doc_id", "text", k = 48, bands = 12, threshold = 0.2)
+        docs.filter(Artifacts.increment("doc_id")), "doc_id", "text",
+        k = Artifacts.SigK, bands = Artifacts.SigBands, threshold = 0.2)
       .select(col("inc_id"), col("corpus_id"))
     verifyPairsExact(docs, cand, "inc_id", "corpus_id", theta = 0.9)
       .orderBy("inc_id", "corpus_id")
@@ -3741,14 +3590,11 @@ object Pipeline {
     * oracle. */
   def streamIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val table = cellTableName("graft_sig_corpus", dir)
-    Dedup.ensureSignatureTable(
-      docs.filter(pmod(col("doc_id"), lit(5)) =!= 4), "doc_id", "text", table,
-      k = 48, bands = 12,
-      tag = graft.core.Warehouse.sourceStamp(s"$dir/documents.parquet"))
+    val table = Artifacts.sigCorpus(spark, dir)
     val work = graft.core.TempDirs.scratchDir("graft-q82")
-    val stage = s"$work/stage"; val out = s"$work/out"; val ckpt = s"$work/ckpt"
-    docs.filter(pmod(col("doc_id"), lit(5)) === 4)
+    val out = s"$work/out"; val ckpt = s"$work/ckpt"
+    val stage = graft.core.TempDirs.tempDir("graft-q82-stage")
+    docs.filter(Artifacts.increment("doc_id"))
       .repartition(4).write.mode("overwrite").parquet(stage)
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string")
@@ -3789,7 +3635,8 @@ object Pipeline {
   private[graft] def dedupStreamBatch(spark: SparkSession, docs: DataFrame,
       table: String, batch: DataFrame, batchId: Long, out: String): Unit = {
     val cand = Dedup.minhashCandidatesAgainstTable(spark, table,
-        batch, "doc_id", "text", k = 48, bands = 12, threshold = 0.2)
+        batch, "doc_id", "text", k = Artifacts.SigK, bands = Artifacts.SigBands,
+        threshold = 0.2)
       .select(col("inc_id"), col("corpus_id"))
     verifyPairsExact(docs, cand, "inc_id", "corpus_id", theta = 0.9)
       .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
@@ -4054,8 +3901,8 @@ object Pipeline {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
     val work = graft.core.TempDirs.scratchDir("graft-q96")
-    val stage = s"$work/stage"; val out = s"$work/out"
-    val ckpt = s"$work/ckpt"; val fpDir = s"$work/fps"
+    val out = s"$work/out"; val ckpt = s"$work/ckpt"; val fpDir = s"$work/fps"
+    val stage = graft.core.TempDirs.tempDir("graft-q96-stage")
     val mx = docs.agg(max("doc_id")).head().getLong(0)
     // each append's part-file name is a fresh UUID (no name order), so the
     // range each file holds is tracked by LISTING DIFF as it lands
@@ -4269,9 +4116,9 @@ object Pipeline {
     * on a query path (r6 judge note: q77 recomputed the full q57 loop).
     * Bucketed by doc_id, the join key every consumer uses against the
     * documents table, so the map side of those joins never re-shuffles. */
-  private[graft] def ensureClusterMap(spark: SparkSession, dir: String,
-                                      nBuckets: Int = 32): DataFrame = {
+  private[graft] def ensureClusterMap(spark: SparkSession, dir: String): DataFrame = {
     val table = cellTableName("graft_clusters", dir)
+    val nBuckets = 32
     val meta = "dup-clusters v1 jaccard=0.35 " +
       graft.core.Warehouse.sourceStamp(s"$dir/documents.parquet")
     graft.core.Warehouse.withTableLock(spark, table) {

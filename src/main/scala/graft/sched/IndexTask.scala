@@ -16,9 +16,10 @@ import org.apache.spark.sql.SparkSession
   * pass of [[graft.operators.Pipeline.ensureCorpusIndex]] over that
   * corpus — MinHash signature table, duplicate-cluster map, IVF cells,
   * seeded + trained PQ code tables, int8 quantization table, and the LSH
-  * bucket table, each through its idempotent `ensure*` (fingerprint
-  * match ⇒ warm re-attach with zero Spark jobs; corpus or config change
-  * ⇒ rebuild). A cadence-scheduled index task is therefore a cheap no-op
+  * bucket table: the corpus-index entries of [[graft.operators.Artifacts]],
+  * each built by its entry's recipe, the same call the queries that read
+  * it make (fingerprint match ⇒ warm re-attach with zero Spark jobs;
+  * corpus or config change ⇒ rebuild). A cadence-scheduled index task is therefore a cheap no-op
   * between corpus refreshes and exactly one rebuild after one — the
   * summary logged to task_logs says which (`built=` vs `warm=`), so an
   * operator reading the log history sees every rebuild with its trigger

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
   * the per-executor state exceeds heap and production should set
   * `spark.sql.streaming.stateStore.providerClass` to
   * `...state.RocksDBStateStoreProvider` (off-heap, incremental
-  * checkpointing). Measured locally (StreamScratch, q48 shape, 4 chunks ×
+  * checkpointing). Measured locally (q48 shape, 4 chunks ×
   * 8 partitions): 3.1 s HDFS vs 3.2 s RocksDB after warmup — a wash at
   * bench-box state sizes, so the default stays; the knob, not the code,
   * is the scale path.

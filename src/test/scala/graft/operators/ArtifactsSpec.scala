@@ -10,8 +10,8 @@ import graft.core.Warehouse
   * corpus suffix and starts with no artifact. */
 class ArtifactsSpec extends SparkSuite {
 
-  private lazy val dir: String = {
-    val d = tmpDir("artifacts-corpus")
+  private def copyCorpus(prefix: String): String = {
+    val d = tmpDir(prefix)
     val src = Paths.get(sfDir)
     val walk = Files.walk(src)
     try walk.toArray.map(_.asInstanceOf[Path]).foreach { p =>
@@ -20,6 +20,8 @@ class ArtifactsSpec extends SparkSuite {
     } finally walk.close()
     d
   }
+
+  private lazy val dir: String = copyCorpus("artifacts-corpus")
 
   /** Fingerprint of every `graft_*` table of this corpus whose fingerprint
     * carries the corpus's document or embedding stamp. */
@@ -85,5 +87,54 @@ class ArtifactsSpec extends SparkSuite {
     val (_, failed) = graft.Bench.prebuild(spark, dir, Artifacts.all)
     assert(failed.isEmpty)
     assert(stamped() == before)
+  }
+
+  test("readers first: one declared reader per corpus-index entry leaves the index task nothing to build") {
+    val readers = Seq("q74_incremental_stored", "q52_ivf_topk", "q152_ivf_partial_probe",
+      "q160_pq_adc_recall", "q164_filtered_ann", "q162_pq_trained_audit",
+      "q158_int8_quant_recall", "q154_incremental_embedding", "q58_dup_clusters_lsh")
+    val index = Artifacts.all.filter(_.builder.isInstanceOf[Artifacts.Ensure])
+    assert(index.forall(_.readers.exists(readers.contains)))
+    val d = copyCorpus("artifacts-readers-first")
+    try {
+      for (q <- readers) {
+        graft.SparkEntry.queries(q)(spark, d).count()
+        graft.core.Mat.releaseAll(blocking = true)
+      }
+      val built = Pipeline.ensureCorpusIndex(spark, d)
+      assert(built.map(_._1) == index.map(_.table(d)))
+      assert(built.forall(!_._2), s"rebuilt after its readers: ${built.filter(_._2).map(_._1)}")
+    } finally Warehouse.sweepCorpus(spark, d)
+  }
+
+  test("the fold view of an empty fold is the plain corpus: building every entry over it changes nothing") {
+    firstBuild
+    val before = stamped()
+    val fold = Pipeline.ensureFoldedTable(spark, dir, "emptyfold")
+    for (Artifacts.Artifact(_, source, _, Artifacts.Ensure(recipe), _) <- Artifacts.all)
+      recipe(Pipeline.foldView(spark, dir, fold,
+        if (source == Artifacts.Embeddings) "vec" else "doc")._2)
+    assert(stamped() == before)
+  }
+
+  test("a grow fold with nothing admitted or removed yields the plain family's rows") {
+    firstBuild
+    val ns = "emptygrow"
+    val (cells, pq, int8) = Pipeline.promoteAdmittedVectors(spark, dir, ns)
+    def t(name: String) = s"graft_${name}_${Warehouse.corpusSuffix(dir)}"
+    def same(a: String, b: String): Unit = {
+      val (x, y) = (spark.table(a), spark.table(b))
+      assert(x.count() == y.count() && x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty,
+        s"$a differs from $b")
+    }
+    val lsh = t(s"vecbkt_grown_$ns")
+    for ((grown, plain) <- Seq(cells -> t("ivf_seed"), pq.table -> t("pq_seed"),
+        int8 -> t("int8"), lsh -> t("vecbkt_adm"));
+        sibling <- Seq("", "_centroids", "_codebook", "_cfg")
+        if Files.isDirectory(Warehouse.tableDir(spark, plain + sibling)))
+      same(grown + sibling, plain + sibling)
+    // the cell and int8 fingerprints match too; the codes' names its cell table
+    for ((grown, plain) <- Seq(cells -> t("ivf_seed"), int8 -> t("int8"), lsh -> t("vecbkt_adm")))
+      assert(Warehouse.fingerprintOf(spark, grown) == Warehouse.fingerprintOf(spark, plain))
   }
 }

@@ -191,4 +191,32 @@ class StreamsSpec extends SparkSuite {
       assert(got.toSeq == Seq((1L, 3)))
     } finally q.stop()
   }
+
+  test("the corpus-scale stream queries stage their input under tempDir, off the scratch volume") {
+    import java.nio.file.{Files, Path, Paths}
+    val tmpRoot = Paths.get(System.getProperty("java.io.tmpdir"))
+    val scratchRoot = graft.core.TempDirs.scratchRoot
+    def dirs(root: Path, prefix: String): Set[Path] = {
+      val s = Files.list(root)
+      try s.toArray.map(_.asInstanceOf[Path])
+        .filter(_.getFileName.toString.startsWith(prefix)).toSet
+      finally s.close()
+    }
+    for (q <- Seq("q82_stream_incremental_dedup", "q96_stream_release_admission",
+        "q159_stream_embedding_admission")) {
+      val prefix = "graft-" + q.takeWhile(_ != '_')
+      val (tmpBefore, scratchBefore) = (dirs(tmpRoot, prefix + "-stage"), dirs(scratchRoot, prefix))
+      graft.SparkEntry.queries(q)(spark, sfDir).count()
+      graft.core.Mat.releaseAll(blocking = true)
+      val staged = dirs(tmpRoot, prefix + "-stage") -- tmpBefore
+      assert(staged.size == 1, s"$q: staged dirs $staged")
+      val parts = Files.list(staged.head)
+      try assert(parts.toArray.exists(_.toString.endsWith(".parquet")), s"$q staged no parquet")
+      finally parts.close()
+      if (scratchRoot != tmpRoot) assert(!staged.head.startsWith(scratchRoot))
+      val work = dirs(scratchRoot, prefix) -- staged -- scratchBefore
+      assert(work.size == 1 && Files.isDirectory(work.head.resolve("ckpt")) &&
+        !Files.exists(work.head.resolve("stage")), s"$q: scratch dirs $work")
+    }
+  }
 }
